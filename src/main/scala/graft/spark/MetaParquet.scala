@@ -88,17 +88,23 @@ object MetaParquet {
   }
 
   /** Every data file of a metadata dir (skips _SUCCESS and hidden files);
-    * empty when the dir does not exist. */
+    * empty when the dir does not exist. The layout must be flat: a visible
+    * subdirectory (a table written with partitionBy, say) throws, because
+    * reading it as empty would let `nextRunId` reuse a committed id. */
   private def dataFiles(dir: String, conf: Configuration): Seq[Path] = {
     val f = fs(dir, conf)
     val p = new Path(dir)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).toSeq
-      .filter(_.isFile)
-      .map(_.getPath)
-      .filterNot { fp =>
-        val n = fp.getName
+      .filterNot { st =>
+        val n = st.getPath.getName
         n.startsWith("_") || n.startsWith(".")
+      }
+      .map { st =>
+        if (st.isDirectory)
+          throw new IllegalStateException(
+            s"metadata dir $dir has a subdirectory ${st.getPath.getName}; its layout must be flat")
+        st.getPath
       }
   }
 
@@ -111,7 +117,8 @@ object MetaParquet {
       } finally r.close()
     }
 
-  /** (run_id, source_fingerprint) of every committed run. */
+  /** (run_id, source_fingerprint) of every committed run; a record without
+    * a fingerprint (possible only in Spark-written stores) reads as "". */
   def readCheckpoint(dir: String, conf: Configuration): Array[(Long, String)] = {
     val out = Array.newBuilder[(Long, String)]
     foreachRow(dir, conf) { g =>
@@ -130,10 +137,13 @@ object MetaParquet {
     out.result()
   }
 
-  /** Append ONE commit record (the store's SaveMode.Append equivalent). */
+  /** Append ONE commit record (the store's SaveMode.Append equivalent).
+    * The fingerprint must be non-null: it is how a compaction names the
+    * runs it supersedes. */
   def appendCommit(
       dir: String, conf: Configuration,
-      runId: Long, docCount: Long, fingerprint: String, committedAt: String): Unit =
+      runId: Long, docCount: Long, fingerprint: String, committedAt: String): Unit = {
+    require(fingerprint != null, s"run_id=$runId: source fingerprint must be non-null")
     writeFile(dir, checkpointSchema, conf) { f =>
       val g = f.newGroup()
       g.add("run_id", runId)
@@ -142,6 +152,7 @@ object MetaParquet {
       g.add("committed_at", committedAt)
       Iterator.single(g)
     }
+  }
 
   def appendRetired(dir: String, conf: Configuration, runIds: Seq[Long]): Unit = {
     if (runIds.isEmpty) return

@@ -54,36 +54,30 @@ object ProductionPipeline {
       // stage counts ride the stage WRITES via df.observe (round-6, guide
       // §1.5/§2.4 do-less-work: each count was its own re-read job over
       // the freshly committed table — pure scheduler overhead; the
-      // observed count of written rows is the same number)
+      // observed count of written rows is the same number), and every
+      // stage reads its table back with the schema it wrote
+      import ExtractJob.writeCounted
       val (ingested, extractedOk) = stage("ingest") {
-        val obs = org.apache.spark.sql.Observation("x33_ingest")
-        web.unionByName(boiler).observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_ingested")
-        val t = s.read.parquet(s"$dir/stage_ingested")
+        val (rows, t) = writeCounted(
+          web.unionByName(boiler).hint("rebalance"), s"$dir/stage_ingested")
         // web docs = staged rows minus the second source
-        (t, obs.get("n").asInstanceOf[Long] - n / 2)
+        (t, rows - n / 2)
       }
       // stage 3: line-level dedup, staged through a table
-      val (cleaned, linesRemoved) = stage("line-dedup") {
-        val obs = org.apache.spark.sql.Observation("x33_linededup")
-        Dedup.dropBoilerplateLines(ingested, "url", "text", minDocs = 5)
-          .observe(obs, coalesce(sum("lines_removed"), lit(0L)).as("removed"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_line_dedup")
-        (s.read.parquet(s"$dir/stage_line_dedup"),
-          obs.get("removed").asInstanceOf[Long])
+      val (linesRemoved, cleaned) = stage("line-dedup") {
+        writeCounted(
+          Dedup.dropBoilerplateLines(ingested, "url", "text", minDocs = 5).hint("rebalance"),
+          s"$dir/stage_line_dedup", coalesce(sum("lines_removed"), lit(0L)))
       }
       // stage 4: exact dedup on cleaned text; long doc ids by url hash
       // (the documented re-key for the integral-id cap/pack carriers)
-      val (corpus, corpusCount) = stage("exact-dedup") {
-        val obs = org.apache.spark.sql.Observation("x33_exact")
-        Dedup.exactDedup(
-            cleaned.select(col("id").as("url"), col("clean_text").as("text")),
-            "url", "text")
-          .withColumn("id", xxhash64(col("url")))
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_exact")
-        (s.read.parquet(s"$dir/stage_exact"),
-          obs.get("n").asInstanceOf[Long])
+      val (corpusCount, corpus) = stage("exact-dedup") {
+        writeCounted(
+          Dedup.exactDedup(
+              cleaned.select(col("id").as("url"), col("clean_text").as("text")),
+              "url", "text")
+            .withColumn("id", xxhash64(col("url"))).hint("rebalance"),
+          s"$dir/stage_exact")
       }
       // stage 5: incremental near-dup — id-parity split, committed half
       // indexed (bucketed), fresh half probed, near-dups dropped.
@@ -94,8 +88,10 @@ object ProductionPipeline {
       // while real near-dups still collide
       val committed = corpus.filter(pmod(col("id"), lit(2)) === 0)
       val fresh = corpus.filter(pmod(col("id"), lit(2)) === 1)
-      var benchDocs = 0L // observed during the survivor write below
-      val (nearDropped, survivors) = stage("neardup-probe") {
+      // the held-out eval slice of stage 6, also counted (bench_docs) on
+      // the survivor write of stage 5
+      val isBenchSlice = pmod(col("id"), lit(17)) === 3
+      val (nearDropped, benchDocs, survivors) = stage("neardup-probe") {
         Dedup.writeMinhashIndex(committed, "id", "text", tbl,
           shingleK = 7, bands = 16, rowsPerBand = 4, buckets = 8)
         // probe verdicts staged ids-only FIRST so the expensive
@@ -104,36 +100,32 @@ object ProductionPipeline {
         // staged like every other boundary — downstream stages otherwise
         // re-execute the probe through the anti-join's lineage on every
         // action (measured 3x: decontaminate, its write, the report)
-        val obs = org.apache.spark.sql.Observation("x33_neardup")
-        Dedup.probeMinhashIndex(fresh, "id", "text", tbl,
-            committed, shingleK = 7, bands = 16, rowsPerBand = 4, threshold = 0.35)
-          .select(col("new_id").as("id")).distinct()
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_neardup_ids")
-        val nearDupIds = s.read.parquet(s"$dir/stage_neardup_ids")
-        // the report's bench_docs count rides this write via observe
-        // (round-6: survivors ≡ the written rows, and the later
-        // bench.count() re-scanned the staged table for one number)
-        val obsSurv = org.apache.spark.sql.Observation("x33_surv")
-        committed.unionByName(fresh.join(nearDupIds, Seq("id"), "left_anti"))
-          .observe(obsSurv, coalesce(sum(when(
-            pmod(col("id"), lit(17)) === 3, 1L).otherwise(0L)), lit(0L)).as("bench_docs"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_neardup")
-        benchDocs = obsSurv.get("bench_docs").asInstanceOf[Long]
-        (obs.get("n").asInstanceOf[Long], s.read.parquet(s"$dir/stage_neardup"))
+        val (dropped, nearDupIds) = writeCounted(
+          Dedup.probeMinhashIndex(fresh, "id", "text", tbl,
+              committed, shingleK = 7, bands = 16, rowsPerBand = 4, threshold = 0.35)
+            .select(col("new_id").as("id")).distinct().hint("rebalance"),
+          s"$dir/stage_neardup_ids")
+        // the report's bench_docs count rides the survivor write: no
+        // re-scan of the staged table for one number
+        val (sliceDocs, surv) = writeCounted(
+          committed.unionByName(fresh.join(nearDupIds, Seq("id"), "left_anti"))
+            .hint("rebalance"),
+          s"$dir/stage_neardup",
+          coalesce(sum(when(isBenchSlice, 1L).otherwise(0L)), lit(0L)))
+        (dropped, sliceDocs, surv)
       }
       // stage 6: decontamination against a held-out eval slice
-      val bench = survivors.filter(pmod(col("id"), lit(17)) === 3)
-      val train = survivors.filter(pmod(col("id"), lit(17)) =!= 3)
+      val bench = survivors.filter(isBenchSlice)
+      val train = survivors.filter(!isBenchSlice)
       val (deconDropped, decon) = stage("decontaminate") {
-        val obs = org.apache.spark.sql.Observation("x33_decon")
-        Decontaminate.contaminatedIds(train, "id", "text", bench, "text", n = 4)
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_decon_ids")
-        val contam = s.read.parquet(s"$dir/stage_decon_ids")
-        train.join(contam.select(col("id")), Seq("id"), "left_anti")
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_decon")
-        (obs.get("n").asInstanceOf[Long], s.read.parquet(s"$dir/stage_decon"))
+        val (dropped, contam) = writeCounted(
+          Decontaminate.contaminatedIds(train, "id", "text", bench, "text", n = 4)
+            .hint("rebalance"),
+          s"$dir/stage_decon_ids")
+        val (_, kept) = writeCounted(
+          train.join(contam.select(col("id")), Seq("id"), "left_anti").hint("rebalance"),
+          s"$dir/stage_decon")
+        (dropped, kept)
       }
       // stage 7: LM perplexity filter (the CCNet third leg, x37's
       // operator composed): a char-bigram model trained on a hash sample
@@ -144,13 +136,11 @@ object ProductionPipeline {
       val (lmDropped, ppKept) = stage("lm-filter") {
         val lmModel = graft.functions.LanguageModel.trainCharBigramLm(
           decon, "id", "text", sampleRate = 0.5, maxPairs = 50000)
-        val obs = org.apache.spark.sql.Observation("x33_lm")
-        graft.functions.LanguageModel.scoreBitsPerChar(decon, "id", "text", lmModel)
-          .filter(col("bits_per_char") > 7.0).select("id")
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_lm_ids")
-        val dropIds = s.read.parquet(s"$dir/stage_lm_ids")
-        (obs.get("n").asInstanceOf[Long], decon.join(dropIds, Seq("id"), "left_anti"))
+        val (dropped, dropIds) = writeCounted(
+          graft.functions.LanguageModel.scoreBitsPerChar(decon, "id", "text", lmModel)
+            .filter(col("bits_per_char") > 7.0).select("id").hint("rebalance"),
+          s"$dir/stage_lm_ids")
+        (dropped, decon.join(dropIds, Seq("id"), "left_anti"))
       }
       // stage 8: training mix — language strata, hash sampling + cap
       val withLang = ppKept

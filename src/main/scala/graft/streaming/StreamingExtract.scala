@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.spark.ExtractPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.ExtractedRow
+import graft.spark.{ExtractJob, ExtractPipeline, ParquetCheckpointStore}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -76,18 +77,19 @@ object StreamingExtract {
     * deployment answers the same resume/audit queries as the batch path
     * (VERDICT r1 #10 — lineage was previously batch-only).
     *
-    * Exactly-once: the checkpoint WAL replays an interrupted batch under
-    * the SAME batchId, and the writes are idempotent (overwrite of that
-    * run_id directory) — the foreachBatch equivalent of the file-sink
-    * commit log. Each batch is also COMMITTED to the `_checkpoint` store
-    * (round-4 review: without the commit, the documented reader views
-    * `ExtractJob.readExtracted`/`readLineage` found no committed runs and
-    * silently returned EMPTY over a fully populated streaming outDir).
-    * The commit is replay-safe: an already-committed batchId is skipped,
-    * not re-committed (the store's duplicate-commit check throws by
-    * design for racing writers — a WAL replay is not a race). A streaming
-    * outDir is its own store: do not point batch `ExtractJob.run` at it
-    * (batch run ids and stream batch ids share the same numbering). */
+    * Exactly-once: every batch goes through the batch job's committed-run
+    * protocol ([[graft.spark.ExtractJob.commitRun]]) and is COMMITTED to the
+    * `_checkpoint` store under its batchId, so the documented reader views
+    * `ExtractJob.readExtracted`/`readLineage` see it (round-4 review:
+    * without the commit they silently returned EMPTY over a fully
+    * populated streaming outDir). The checkpoint WAL replays an
+    * interrupted batch under the SAME batchId: an already-committed
+    * batchId is skipped whole — its directories are not rewritten and
+    * nothing is re-committed — while an uncommitted one is redone from
+    * scratch (its writes overwrite that run_id's directories). A
+    * streaming outDir is its own store: do not point batch
+    * `ExtractJob.run` at it (batch run ids and stream batch ids share the
+    * same numbering). */
   def runWithLineage(
       spark: SparkSession,
       inDir: String,
@@ -101,24 +103,16 @@ object StreamingExtract {
     // folds each batch's record into the instance cache, so later batches'
     // isCommitted checks don't re-read the checkpoint table they just
     // extended (review finding: a fresh per-batch store re-read it B times)
-    val store = new graft.spark.ParquetCheckpointStore(spark, outDir)
+    val store = new ParquetCheckpointStore(spark, outDir)
     extracted.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.core.ExtractedRow], batchId: Long) =>
-        val df = batch.toDF().withColumn("partition_id", spark_partition_id())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the commit's doc count rides the extracted write via observe
-          // (round-6: the separate df.count() was one more job per batch)
-          val obs = org.apache.spark.sql.Observation(s"extract_batch_$batchId")
-          df.observe(obs, count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$outDir/extracted/run_id=$batchId")
-          graft.spark.ExtractJob.lineageAgg(df)
-            .write.mode("overwrite").parquet(s"$outDir/lineage/run_id=$batchId")
-          if (!store.isCommitted(batchId))
-            store.commit(batchId, obs.get("n").asInstanceOf[Long], s"stream:batch=$batchId")
-        } finally { df.unpersist(false); () }
+      .foreachBatch { (batch: Dataset[ExtractedRow], batchId: Long) =>
+        if (!store.isCommitted(batchId)) { // replay of a committed batch: skip whole
+          ExtractJob.commitRun(store, outDir, batchId, batch.toDF(),
+            s"stream:batch=$batchId")(audit = ())
+          ()
+        }
       }
       .start()
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.Dedup
-import graft.spark.ParquetCheckpointStore
+import graft.spark.{ExtractJob, ParquetCheckpointStore}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -82,21 +82,15 @@ object StreamingNearDup {
                   oldCorpus, shingleK, bands, rowsPerBand, threshold)
               }
             pairs.write.mode("overwrite").parquet(s"$outDir/pairs/run_id=$batchId")
-            // the commit's doc count rides the corpus write via observe
-            // (round-6, guide §1.5: the separate df.count() was one more
-            // scheduler round-trip per batch over the same cached rows)
-            val obs = org.apache.spark.sql.Observation(s"neardup_batch_$batchId")
-            df.observe(obs, org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"$outDir/corpus/run_id=$batchId")
+            // the commit's doc count rides the corpus write: no count job
+            val (docs, _) = ExtractJob.writeCounted(df, s"$outDir/corpus/run_id=$batchId")
             if (prior.isEmpty)
               Dedup.writeMinhashIndex(df, "doc_id", "text", indexTable,
                 shingleK, bands, rowsPerBand, buckets)
             else
               Dedup.appendToMinhashIndex(df, "doc_id", "text", indexTable,
                 shingleK, bands, rowsPerBand, buckets)
-            store.commit(batchId, obs.get("n").asInstanceOf[Long],
-              s"stream-neardup:batch=$batchId")
+            store.commit(batchId, docs, s"stream-neardup:batch=$batchId")
           } finally { df.unpersist(false); () }
         }
       }

@@ -1,0 +1,92 @@
+package graft.spark
+
+import graft.streaming.StreamingExtract
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the number of Spark jobs each committed-run entry point launches.
+  * The protocol's metadata lives on the driver and every read-back of a
+  * just-written directory passes the written schema, so apart from
+  * compaction's one schema read of the live runs the counts are data jobs
+  * only: a regression that adds a schema-inference job, a separate count
+  * or a metadata round-trip shows up here as +1.
+  *
+  * Hot hosts come from a static list, so the sampling pre-pass (not part
+  * of the protocol) launches no jobs. */
+class CommitJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+  private val jobs = new java.util.concurrent.atomic.AtomicInteger
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder().master("local[4]")
+      .appName("commit-job-count-spec")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    })
+  }
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private val cfg = ExtractPipeline.PipelineConfig(
+    numPartitions = 4, staticHotHosts = Some(Set("hot.example.com")))
+
+  private def jobsOf(f: => Any): Int = {
+    ListenerBusDrain.drain(spark.sparkContext)
+    val before = jobs.get
+    f
+    ListenerBusDrain.drain(spark.sparkContext)
+    jobs.get - before
+  }
+
+  /** `n` pages landed as a parquet table and read with the known schema,
+    * so the input scan itself infers nothing. */
+  private def landed(dir: String, n: Long): DataFrame = {
+    val in = s"$dir/in_$n"
+    Corpus.pages(spark, n).write.parquet(in)
+    spark.read.schema(StreamingExtract.pageSchema).parquet(in)
+  }
+
+  private def tmp(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("fresh run: extract+write (map stage + write) and lineage (map stage + write)") {
+    val dir = tmp("graft_jobs_fresh")
+    val pages = landed(dir, 300)
+    assert(jobsOf(ExtractJob.run(spark, pages, s"$dir/out", cfg)) == 4)
+    assert(ExtractJob.readExtracted(spark, s"$dir/out").count() == 300)
+  }
+
+  test("resuming run: the anti-join adds one job, the committed-url scan none") {
+    val dir = tmp("graft_jobs_resume")
+    ExtractJob.run(spark, landed(dir, 200), s"$dir/out", cfg)
+    val pages = landed(dir, 300)
+    var r: ExtractJob.RunResult = null
+    assert(jobsOf { r = ExtractJob.run(spark, pages, s"$dir/out", cfg) } == 5)
+    assert(r.newDocs == 100)
+  }
+
+  test("compact: one schema read of the live runs, the rewrite and its lineage") {
+    val dir = tmp("graft_jobs_compact")
+    ExtractJob.run(spark, landed(dir, 200), s"$dir/out", cfg)
+    ExtractJob.run(spark, landed(dir, 300), s"$dir/out", cfg)
+    var c: ExtractJob.RunResult = null
+    assert(jobsOf { c = ExtractJob.compact(spark, s"$dir/out") } == 5)
+    assert(c.docs == 300)
+  }
+
+  test("one-batch runWithLineage drain: extract+write and lineage, nothing cached") {
+    val dir = tmp("graft_jobs_stream")
+    Corpus.pages(spark, 200).write.parquet(s"$dir/in")
+    val n = jobsOf(StreamingExtract.runWithLineage(
+      spark, s"$dir/in", s"$dir/out", s"$dir/ckpt", cfg).awaitTermination())
+    assert(n == 4)
+    assert(ExtractJob.readExtracted(spark, s"$dir/out").count() == 200)
+  }
+}

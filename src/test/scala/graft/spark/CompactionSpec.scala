@@ -91,4 +91,14 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // resume still exact
     assert(ExtractJob.run(spark, Corpus.pages(spark, 300), out, cfg).newDocs == 0)
   }
+
+  test("compact over runs that are all empty commits 0 docs") {
+    val out = java.nio.file.Files.createTempDirectory("graft_compact_empty").toString
+    val cfg = ExtractPipeline.PipelineConfig(repartitionByHost = false, numPartitions = 2)
+    assert(ExtractJob.run(spark, Corpus.pages(spark, 0), out, cfg).newDocs == 0)
+    val c = ExtractJob.compact(spark, out)
+    assert(c.docs == 0)
+    assert(new ParquetCheckpointStore(spark, out).committedRunIds() == Seq(c.runId))
+    assert(ExtractJob.readExtracted(spark, out).count() == 0)
+  }
 }

@@ -115,4 +115,35 @@ class MetaParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the multi-run union read (readHotHosts' shape) still resolves
     assert(spark.read.parquet(p0, p1).count() == 2)
   }
+
+  test("a null fingerprint fails the commit loudly and writes nothing") {
+    val dir = tmp("meta_nullfp")
+    val p = s"$dir/_checkpoint"
+    intercept[IllegalArgumentException] {
+      MetaParquet.appendCommit(p, conf, 0L, 1L, null, "2026-01-01T00:00:00Z")
+    }
+    intercept[IllegalArgumentException] {
+      new ParquetCheckpointStore(spark, dir).commit(0L, 1L, null)
+    }
+    // no visible record and no temp orphan
+    assert(!new java.io.File(p).exists() || new java.io.File(p).listFiles().isEmpty)
+  }
+
+  test("a metadata dir with a visible subdirectory throws instead of reading as empty") {
+    val dir = tmp("meta_nested")
+    val s = spark; import s.implicits._
+    // a partitionBy write nests every record under run_id=N/
+    Seq((0L, 300L, "fp0", "2026-01-01T00:00:00Z"))
+      .toDF("run_id", "doc_count", "source_fingerprint", "committed_at")
+      .write.partitionBy("run_id").parquet(s"$dir/_checkpoint")
+    val e = intercept[IllegalStateException] {
+      new ParquetCheckpointStore(spark, dir).nextRunId() // would reuse run 0
+    }
+    assert(e.getMessage.contains("run_id=0"))
+    intercept[IllegalStateException](MetaParquet.readCheckpoint(s"$dir/_checkpoint", conf))
+    // hidden and underscore entries (a crashed Spark writer's _temporary) stay skipped
+    new java.io.File(s"$dir/_retired/_temporary/0").mkdirs()
+    new java.io.File(s"$dir/_retired/.hidden").mkdirs()
+    assert(MetaParquet.readRetired(s"$dir/_retired", conf).isEmpty)
+  }
 }

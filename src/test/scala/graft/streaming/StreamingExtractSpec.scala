@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -178,5 +179,40 @@ class StreamingExtractSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("url").contains("hot.example.com"))
       .select("partition_id").distinct().count()
     assert(parts >= 4, s"hot host landed on only $parts partitions — not salted")
+  }
+
+  test("runWithLineage replay of a committed batch is skipped whole") {
+    val base = java.nio.file.Files.createTempDirectory("graft_stream_replay").toString
+    val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
+    Corpus.pages(spark, 200).write.mode("append").parquet(in)
+    StreamingExtract.runWithLineage(spark, in, out, ckpt).awaitTermination()
+
+    // every file under a directory: relative name -> content hash
+    def snapshot(dir: String): Map[String, Int] = {
+      val root = java.nio.file.Paths.get(dir)
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString ->
+          java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f)))
+        .toMap
+      finally files.close()
+    }
+    val dirs = Seq("_checkpoint", "extracted", "lineage")
+    val before = dirs.map(d => snapshot(s"$out/$d"))
+    val rowsBefore = graft.spark.ExtractJob.readExtracted(spark, out)
+      .select("url", "text", "failure").collect().map(_.toString).sorted.toSeq
+    assert(rowsBefore.length == 200)
+
+    // lose the stream's commit of batch 0: the next drain replays it
+    // under the same batchId
+    val commit0 = new java.io.File(s"$ckpt/commits/0")
+    assert(commit0.delete())
+    new java.io.File(s"$ckpt/commits/.0.crc").delete() // its checksum, if any
+    StreamingExtract.runWithLineage(spark, in, out, ckpt).awaitTermination()
+    assert(commit0.exists(), "the replayed batch was not re-committed by the stream")
+
+    assert(dirs.map(d => snapshot(s"$out/$d")) == before)
+    assert(graft.spark.ExtractJob.readExtracted(spark, out)
+      .select("url", "text", "failure").collect().map(_.toString).sorted.toSeq == rowsBefore)
   }
 }
