@@ -176,10 +176,11 @@ object Dedup {
     * id_b, deduplicated across bands.
     *
     * Shuffle discipline (the 100 TB constraint): ONLY (id, band, bandHash)
-    * rides the banded self-join — never the text. Candidates are id pairs;
-    * text is joined back BY ID for the surviving candidates only, so the
-    * corpus payload crosses an exchange at most twice (the two candidate-id
-    * joins) instead of ×2·bands through posexplode + both join sides.
+    * rides the banded self-join — never the text (not ×2·bands copies
+    * through posexplode + both join sides). Candidates are id pairs, and
+    * only ids cross the verify exchange, which groups them by id_a; both
+    * texts join back BY ID after it ([[groupedForVerify]]), so the verify
+    * builds each document's shingle set once per group, not once per pair.
     *
     * PRECONDITION at scale: run EXACT dedup first — identical texts have
     * identical signatures, so m copies of one page form an m²/2 candidate
@@ -205,33 +206,75 @@ object Dedup {
         col("l.bandHash") === col("r.bandHash") && col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b") // candidate may fire in several bands
-    // text joins share one exchange of `base` the same way (both sides
-    // shuffle base on its id)
-    val joined = cand
-      .join(base.as("ta"), col("id_a") === col("ta.id"))
-      .join(base.as("tb"), col("id_b") === col("tb.id"))
-      .select(col("id_a"), col("id_b"),
-        col("ta.text").as("text_a"), col("tb.text").as("text_b"))
-      // verify-stage parallelism guard: the candidate set is small in BYTES,
-      // so AQE coalesces the join output to ~1 partition — and the exact-
-      // Jaccard kernel (expensive per ROW, invisible to AQE's size-based
-      // cost model) would run serially. REPARTITION_BY_NUM pins the verify
-      // stage wide; it moves candidate pairs only, never the corpus.
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-      .select("id_a", "id_b", "text_a", "text_b")
-    // the verify itself is an opaque typed stage: as a UDF-in-filter,
-    // Catalyst pushed the threshold predicate INTO the candidate join
-    // (below the repartition, serialized by AQE coalescing) and evaluated
-    // the kernel twice (join condition + projection). mapPartitions is a
-    // barrier the optimizer cannot push through and runs the kernel
-    // exactly once per pair (measured 9.5s → ~2s at sf0.1, 117k pairs).
-    verifyJaccard(joined, shingleK, threshold)
+    // verify input, grouped by id_a: only the id pairs cross the verify
+    // exchange; both texts join back BY ID after it (the two joins share
+    // one broadcast or one exchange of `base`)
+    verifyJaccard(groupedForVerify(cand, "id_a", "id_b",
+      base.select(col("id").as("id_b"), col("text").as("text_b")),
+      base.select(col("id").as("id_a"), col("text").as("text_a"))),
+      shingleK, threshold)
   }
 
+  /** The verify input: candidate id pairs (groupId, otherId) with both
+    * texts joined on, shaped so [[verifyJaccard]] builds each document's
+    * shingle set once.
+    *
+    *  1. Hash-partition the deduped ids-only candidates on `groupId` —
+    *     the ONLY exchange of the verify stage, and it moves ids, never
+    *     text. It is also the parallelism guard: the candidate set is
+    *     small in BYTES, so AQE would coalesce it to ~1 partition and the
+    *     exact-Jaccard kernel (expensive per ROW, invisible to AQE's
+    *     size-based cost model) would run serially; REPARTITION_BY_NUM
+    *     pins the stage at numShufflePartitions tasks.
+    *  2. Join the other side's texts (`otherTexts`: otherId, other text),
+    *     then the grouping side's (`groupTexts`: groupId, group text), by
+    *     id. While the text sides broadcast (AQE, candidate-sized
+    *     corpora) the rows keep the `groupId` partitioning and no
+    *     exchange carries text. A text side too large to broadcast turns
+    *     its join into a shuffled join: that corpus side shuffles by id,
+    *     and the candidates re-shuffle with at most the other side's text.
+    *  3. Sort within partitions on `groupId`, so each document's pairs
+    *     arrive as one run.
+    *
+    * Output: (groupId, otherId, group text, other text) — the ordinals
+    * [[verifyJaccard]] reads. */
+  private def groupedForVerify(
+      cand: DataFrame, groupId: String, otherId: String,
+      otherTexts: DataFrame, groupTexts: DataFrame): DataFrame =
+    cand
+      .repartition(cand.sparkSession.sessionState.conf.numShufflePartitions, col(groupId))
+      .join(otherTexts, Seq(otherId))
+      .join(groupTexts, Seq(groupId))
+      .sortWithinPartitions(groupId)
+      .select(col(groupId), col(otherId), col(groupTexts.columns(1)),
+        col(otherTexts.columns(1)))
+
+  /** Per-task cap on the shingle longs [[verifyJaccard]]'s memo holds:
+    * 2^20 longs ≈ 8 MB. Bounded by BYTES, not entries — one 100k-char
+    * document's set alone is ~800 KB, so an entry cap either wastes the
+    * memo on short texts or lets a few long ones pin tens of MB. */
+  private final val VerifyMemoLongs = 1 << 20
+
   /** Exact-Jaccard verification of candidate pairs. Input schema MUST be
-    * (idA, idB, text_a, text_b) with texts at ordinals 2/3; output is
-    * (idA, idB, jaccard rounded to 4). Typed mapPartitions on purpose —
-    * an optimizer barrier, see the call-site notes in [[minhashPairs]]. */
+    * (groupId, otherId, group_text, other_text) with texts at ordinals
+    * 2/3, ideally grouped by groupId ([[groupedForVerify]]); output is
+    * (groupId, otherId, jaccard rounded to 4). Typed mapPartitions on
+    * purpose: as a UDF-in-filter, Catalyst pushed the threshold predicate
+    * INTO the candidate join and evaluated the kernel twice (join
+    * condition + projection); mapPartitions is a barrier the optimizer
+    * cannot push through and runs the kernel exactly once per pair.
+    *
+    * Shingle sets are built once per document, not once per pair:
+    *  - the grouping side through a one-entry cache, rebuilt when the
+    *    run of equal groupIds ends;
+    *  - the other side through a memo keyed by otherId (hub documents
+    *    pair with many group documents). The memo holds at most
+    *    [[VerifyMemoLongs]] shingle longs per task; it is cleared when
+    *    the next set would pass that bound, and a set larger than the
+    *    bound is never held.
+    * Both caches hit only on an equal text too (`String.equals`, cheap
+    * next to a rebuild), so an id that carries two texts never gets a
+    * stale set. */
   private[functions] def verifyJaccard(
       joined: DataFrame, shingleK: Int, threshold: Double): DataFrame = {
     val idA = joined.schema(0)
@@ -240,24 +283,33 @@ object Dedup {
       idA, idB, org.apache.spark.sql.types.StructField("jaccard",
         org.apache.spark.sql.types.DoubleType, nullable = false)))
     joined.mapPartitions { it =>
-      // per-task shingle-set memo: one text typically appears in MANY
-      // candidate pairs (hub docs; shared boilerplate), and rebuilding
-      // its shingle set per pair re-pays the dominant verify cost. The
-      // map is bounded (cleared at 512 entries ≈ a few MB of arrays) so
-      // a task can never accumulate corpus-sized state.
-      val memo = new java.util.HashMap[String, Array[Long]](256)
-      def setOf(t: String): Array[Long] = {
-        var a = memo.get(t)
-        if (a == null) {
-          a = shingleSet(t, shingleK)
-          if (memo.size >= 512) memo.clear()
-          memo.put(t, a)
+      var groupId: Any = null
+      var groupText: String = null
+      var groupSet: Array[Long] = null
+      val memo = new java.util.HashMap[Any, (String, Array[Long])](256)
+      var memoLongs = 0L
+      def otherSet(id: Any, t: String): Array[Long] = {
+        val hit = memo.get(id)
+        if (hit != null && hit._1 == t) hit._2
+        else {
+          val a = shingleSet(t, shingleK)
+          if (a.length <= VerifyMemoLongs) {
+            if (hit != null) memoLongs -= hit._2.length
+            if (memoLongs + a.length > VerifyMemoLongs) { memo.clear(); memoLongs = 0L }
+            memo.put(id, (t, a))
+            memoLongs += a.length
+          }
+          a
         }
-        a
       }
       it.flatMap { row =>
-        val j = jaccardFromSorted(setOf(row.getString(2)), setOf(row.getString(3)))
-        if (j >= threshold) Some(org.apache.spark.sql.Row(row.get(0), row.get(1), j))
+        val gid = row.get(0)
+        val gt = row.getString(2)
+        if (groupSet == null || gid != groupId || gt != groupText) {
+          groupId = gid; groupText = gt; groupSet = shingleSet(gt, shingleK)
+        }
+        val j = jaccardFromSorted(groupSet, otherSet(row.get(1), row.getString(3)))
+        if (j >= threshold) Some(org.apache.spark.sql.Row(gid, row.get(1), j))
         else None
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
@@ -407,37 +459,30 @@ object Dedup {
     *
     * Scale shape: the new batch's band rows shuffle INTO the index's
     * bucketing (ids+hashes only); the index side is an exchange-free
-    * bucketed scan, already sorted on the join key. Candidate pairs are
-    * ids-only; texts join back BY ID for survivors, so the old corpus
-    * payload crosses an exchange at most once, restricted to candidates
-    * (broadcast at small candidate counts via AQE). Same parameters as
+    * bucketed scan. Candidate pairs are ids-only, and only ids cross the
+    * verify exchange, which groups them by new_id; the old and then the
+    * new texts join back BY ID after it ([[groupedForVerify]]; while the
+    * text sides broadcast, no exchange carries text). Same parameters as
     * the index write MUST be used, or band hashes will not align. */
   def probeMinhashIndex(
       newDf: DataFrame, idCol: String, textCol: String,
       indexTable: String, oldCorpus: DataFrame,
       shingleK: Int = 5, bands: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.6): DataFrame = {
-    val spark = newDf.sparkSession
-    val newBase = newDf.select(col(idCol).as("new_id"), col(textCol).as("new_text"))
-    val oldBase = oldCorpus.select(col(idCol).as("old_id"), col(textCol).as("old_text"))
     val probe = bandRows(newDf, idCol, textCol, shingleK, bands, rowsPerBand)
       .select(col("id").as("new_id"), col("band_hash"))
     val cand = probe
-      .join(spark.table(indexTable).select(col("id").as("old_id"), col("band_hash")),
-        Seq("band_hash"))
+      .join(newDf.sparkSession.table(indexTable)
+        .select(col("id").as("old_id"), col("band_hash")), Seq("band_hash"))
       // a re-submitted doc id probes its own index rows at jaccard 1.0;
       // incremental semantics report only new-vs-OTHER pairs
       .filter(col("new_id") =!= col("old_id"))
       .select("new_id", "old_id")
       .dropDuplicates("new_id", "old_id") // a candidate may fire in several bands
-    val joined = cand
-      .join(newBase, Seq("new_id"))
-      .join(oldBase, Seq("old_id"))
-      // verify-stage parallelism guard, as in minhashPairs: candidates are
-      // small in bytes, AQE would coalesce the expensive kernel to ~1 task
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-      .select("new_id", "old_id", "new_text", "old_text")
-    verifyJaccard(joined, shingleK, threshold)
+    verifyJaccard(groupedForVerify(cand, "new_id", "old_id",
+      oldCorpus.select(col(idCol).as("old_id"), col(textCol).as("old_text")),
+      newDf.select(col(idCol).as("new_id"), col(textCol).as("new_text"))),
+      shingleK, threshold)
   }
 
   // --- line-level boilerplate dedup ------------------------------------------

@@ -100,6 +100,31 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs.toSeq == Seq((1, 2)))
   }
 
+  test("verifyJaccard: an id that carries two texts never gets a stale shingle set") {
+    // one task sees every row in this order: other id 7 comes back with a
+    // new text, and group id 2 changes text mid-run — both caches must
+    // rebuild, or rows 3 and 4 would score against the earlier text
+    val fox = "the quick brown fox jumps over the lazy dog near the river"
+    val cat = "spark plans a shuffle exchange for every wide transformation"
+    val s = spark; import s.implicits._
+    val rows = Seq(
+      (1, 7, fox, fox.replace("lazy", "sleepy")),
+      (1, 8, fox, cat),
+      (2, 7, cat.replace("every", "each"), cat),
+      (2, 9, fox.replace("river", "bank"), fox))
+    val input = rows.toDF("g", "o", "g_text", "o_text").coalesce(1)
+    assert(input.rdd.getNumPartitions == 1)
+    val got = Dedup.verifyJaccard(input, 5, 0.0)
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).sorted.toSeq
+    val want = rows.map { case (g, o, gt, ot) =>
+      (g, o, BigDecimal(Dedup.jaccardKernel(gt, ot, 5))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble) }.sorted
+    assert(got == want)
+    // the two text families share no shingle, so a stale set would score
+    // rows 3 and 4 near 0 instead of as the near-dups they are
+    assert(Dedup.jaccardKernel(fox, cat, 5) == 0.0 && want.drop(2).forall(_._3 > 0.5), s"$want")
+  }
+
   test("simhash: small edit → small hamming; different docs → large") {
     val a = Dedup.simhashKernel("the quick brown fox jumps over the lazy dog again and again")
     val b = Dedup.simhashKernel("the quick brown fox jumps over the lazy cat again and again")
@@ -212,6 +237,56 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.enabled")
     }
+  }
+
+  /** The verify-stage contract, checked on the plan AQE actually ran:
+    * below the typed verify stage (the plan's one MapPartitions) no
+    * shuffle exchange carries a text column — only candidate ids cross,
+    * texts join onto them after the exchange — and the stage runs
+    * `spark.sql.shuffle.partitions` tasks, fed by a hash exchange on the
+    * grouping id (`groupId`), so each document's pairs land in one task. */
+  private def idsOnlyVerifyStage(q: org.apache.spark.sql.DataFrame, groupId: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object aqe extends AdaptiveSparkPlanHelper
+    assert(q.collect().nonEmpty, "the contract needs verified pairs to mean anything")
+    val plan = q.queryExecution.executedPlan
+    val verify = aqe.collect(plan) { case m: MapPartitionsExec => m }
+    assert(verify.size == 1, s"expected one verify MapPartitions:\n$plan")
+    val exchanges = aqe.collect(verify.head) { case e: ShuffleExchangeExec => e }
+    exchanges.foreach { e =>
+      val cols = e.output.map(_.name)
+      assert(!cols.exists(_.contains("text")),
+        s"exchange below the verify carries text ($cols):\n$plan")
+    }
+    val n = spark.sessionState.conf.numShufflePartitions
+    assert(exchanges.exists(e => e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.numPartitions == n && h.expressions.flatMap(_.references.map(_.name)) == Seq(groupId)
+      case _ => false
+    }), s"verify is not fed by a $n-way hash exchange on $groupId:\n$plan")
+    val tasks = q.queryExecution.toRdd.getNumPartitions // the verify's stage is the last
+    assert(tasks == n, s"verify stage ran $tasks tasks, not $n:\n$plan")
+  }
+
+  test("minhashPairs + probeMinhashIndex: verify stage is ids-only and numShufflePartitions wide (AQE on)") {
+    // production settings: AQE on, default broadcast threshold — AQE
+    // coalesces the small candidate set and broadcasts the text sides
+    val s = spark; import s.implicits._
+    val texts = (0 until 12).map(i => s"shared preamble about web text number ${i % 4} and more words $i")
+    val all = texts.zipWithIndex.map { case (t, i) => (i + 1, t) }
+    val q = Dedup.minhashPairs(all.toDF("doc_id", "text"), "doc_id", "text", threshold = 0.3)
+    idsOnlyVerifyStage(q, "id_a")
+    val tbl = "inc_idx_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    try {
+      val (old, fresh) = all.partition(_._1 % 2 == 0)
+      Dedup.writeMinhashIndex(old.toDF("doc_id", "text"), "doc_id", "text", tbl, buckets = 4)
+      val p = Dedup.probeMinhashIndex(fresh.toDF("doc_id", "text"), "doc_id", "text", tbl,
+        old.toDF("doc_id", "text"), threshold = 0.3)
+      idsOnlyVerifyStage(p, "new_id")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   test("embeddingNearDupPairs: NO embedding rides the bucket-join exchanges") {
