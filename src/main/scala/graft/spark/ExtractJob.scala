@@ -1,6 +1,9 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import graft.core.Failure
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Committed, resumable extraction runs: extracted table + per-partition
@@ -17,7 +20,9 @@ import org.apache.spark.sql.functions._
   *                           per run: written to _tmp then renamed)
   *   lineage/run_id=N/     — one row per output partition: doc/byte counts +
   *                           failure taxonomy counts (the reference's
-  *                           per-page stats, main/segment.c:158-174, as data)
+  *                           per-page stats, main/segment.c:158-174, as data),
+  *                           counted on the extracted write and written by
+  *                           the driver ([[MetaParquet.writeLineage]])
   *   _checkpoint/          — one row per committed run: run_id, source
   *                           fingerprint, counts, committed_at
   *
@@ -119,58 +124,100 @@ object ExtractJob {
   /** The committed-run protocol — the one write path of [[run]],
     * [[compact]] and [[graft.streaming.StreamingExtract.runWithLineage]]:
     *  1. tag every row with its output `partition_id`;
-    *  2. write `extracted/run_id=N`, the doc count observed on the write
-    *     itself (the reference's running per-page stats,
-    *     main/segment.c:158-174 — no second scan);
-    *  3. write `lineage/run_id=N` from the WRITTEN files, read back with the
-    *     schema just written (no inference job, never re-extracts, nothing
-    *     cached);
+    *  2. write `extracted/run_id=N` and observe, on the write itself, the
+    *     doc count and the per-partition lineage counters (the reference's
+    *     running per-page stats, main/segment.c:158-174 — no second scan,
+    *     no read-back; one Spark query per committed write);
+    *  3. write those ≤ P rows to `lineage/run_id=N` on the driver
+    *     ([[MetaParquet.writeLineage]]);
     *  4. run the caller's `audit` writes;
     *  5. commit LAST with the observed count — a crash before the commit
     *     leaves an uncommitted run that the next run redoes.
-    * Returns the committed doc count. */
+    * Σ lineage `doc_count` equals the committed count: both come from the
+    * same aggregation pass. Returns the committed doc count. */
   private[graft] def commitRun(
       store: ParquetCheckpointStore, outDir: String, runId: Long, df: DataFrame,
       fingerprint: String, maxRecordsPerFile: Long = 0L)(audit: => Unit): Long = {
-    val (docs, written) = writeCounted(
+    val observed = writeObserved(
       df.withColumn("partition_id", spark_partition_id()),
-      s"$outDir/extracted/run_id=$runId", maxRecordsPerFile = maxRecordsPerFile)
-    lineageAgg(written).write.mode(SaveMode.Overwrite).parquet(s"$outDir/lineage/run_id=$runId")
+      s"$outDir/extracted/run_id=$runId", maxRecordsPerFile,
+      count(lit(1)).as("docs"),
+      LineageCounters.column(
+        col("partition_id"), col("n_bytes_in"), col("n_chars"), col("failure")).as("lineage"))
+    val docs = observed("docs").asInstanceOf[Long]
+    val lineage = observed("lineage").asInstanceOf[collection.Map[Int, collection.Seq[Long]]]
+      .toSeq.sortBy(_._1)
+      .map { case (p, c) => LineageRow(p, c(0), c(1), c(2), c(3), c(4), c(5), c(6), c(7)) }
+    MetaParquet.writeLineage(s"$outDir/lineage/run_id=$runId",
+      df.sparkSession.sparkContext.hadoopConfiguration, lineage)
     audit
     store.commit(runId, docs, fingerprint)
     docs
   }
 
-  /** Overwrite `path` with `df`; returns `metric`, observed on the write job
-    * itself (df.observe — a separate count would be a second scan), and the
-    * written table read back with `df`'s schema (no schema-inference job). */
-  private[graft] def writeCounted(
-      df: DataFrame, path: String, metric: Column = count(lit(1)),
-      maxRecordsPerFile: Long = 0L): (Long, DataFrame) = {
-    val obs = Observation()
-    val writer = df.observe(obs, metric.as("v")).write.mode(SaveMode.Overwrite)
-    (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
-     else writer).parquet(path)
-    (obs.get("v").asInstanceOf[Long], df.sparkSession.read.schema(df.schema).parquet(path))
+  /** One lineage row (public: [[MetaParquet.writeLineage]] takes it): the
+    * doc/byte counts and the failure taxonomy of one output partition. */
+  final case class LineageRow(
+      partition_id: Int, doc_count: Long, bytes_in: Long, chars_out: Long,
+      n_ok: Long, n_empty: Long, n_unsupported: Long, n_parse_error: Long, n_oversize: Long)
+
+  /** The lineage counters as an observable aggregate over
+    * (partition_id, n_bytes_in, n_chars, failure): partition_id → [docs,
+    * bytes in, chars out, then one count per [[graft.core.Failure.all]]
+    * class]. A write task sees one partition_id, so the buffer holds one
+    * entry per task; its arrays are bumped in place. Nulls count as a
+    * groupBy's `sum` and `=== "ok"` would: a null byte or char count
+    * reaches `reduce` as 0, a null `failure` is in no class. (Only a
+    * partition whose counts are ALL null differs: 0 here, null from `sum`;
+    * the kernel's counts are never null.) */
+  private object LineageCounters
+      extends Aggregator[(Int, Long, Int, String), Map[Int, Array[Long]], Map[Int, Array[Long]]] {
+    private val nCounters = 3 + Failure.all.length
+    def zero: Map[Int, Array[Long]] = Map.empty
+    def reduce(b: Map[Int, Array[Long]], r: (Int, Long, Int, String)): Map[Int, Array[Long]] = {
+      val known = b.get(r._1)
+      val c = known.getOrElse(new Array[Long](nCounters))
+      c(0) += 1; c(1) += r._2; c(2) += r._3
+      val k = Failure.all.indexOf(r._4)
+      if (k >= 0) c(3 + k) += 1
+      if (known.isDefined) b else b.updated(r._1, c)
+    }
+    def merge(b1: Map[Int, Array[Long]], b2: Map[Int, Array[Long]]): Map[Int, Array[Long]] =
+      b2.foldLeft(b1) { case (acc, (p, c2)) =>
+        acc.get(p) match {
+          case Some(c1) => for (i <- c1.indices) c1(i) += c2(i); acc
+          case None => acc.updated(p, c2)
+        }
+      }
+    def finish(b: Map[Int, Array[Long]]): Map[Int, Array[Long]] = b
+    // derived once per JVM: Spark asks for these on every plan copy and task
+    private val encoder: Encoder[Map[Int, Array[Long]]] = ExpressionEncoder[Map[Int, Array[Long]]]()
+    def bufferEncoder: Encoder[Map[Int, Array[Long]]] = encoder
+    def outputEncoder: Encoder[Map[Int, Array[Long]]] = encoder
+    /** The aggregate as a column function of (partition_id, n_bytes_in, n_chars, failure). */
+    val column = udaf(this)
   }
 
-  /** Per-partition lineage rows over extracted output carrying a
-    * `partition_id` column: doc/byte counts + the full failure taxonomy
-    * (the reference's per-page stats, main/segment.c:158-174, as data).
-    * Shared by the batch job and the streaming per-batch audit
-    * ([[graft.streaming.StreamingExtract.runWithLineage]]). */
-  def lineageAgg(written: DataFrame): DataFrame =
-    written
-      .groupBy(col("partition_id"))
-      .agg(
-        count(lit(1)).as("doc_count"),
-        sum("n_bytes_in").as("bytes_in"),
-        sum("n_chars").as("chars_out"),
-        sum(when(col("failure") === "ok", 1L).otherwise(0L)).as("n_ok"),
-        sum(when(col("failure") === "empty", 1L).otherwise(0L)).as("n_empty"),
-        sum(when(col("failure") === "unsupported_payload", 1L).otherwise(0L)).as("n_unsupported"),
-        sum(when(col("failure") === "parse_error", 1L).otherwise(0L)).as("n_parse_error"),
-        sum(when(col("failure") === "oversize", 1L).otherwise(0L)).as("n_oversize"))
+  /** Overwrite `path` with `df`; returns `metric`, observed on the write job
+    * itself, and the written table read back with `df`'s schema (no
+    * schema-inference job). */
+  private[graft] def writeCounted(
+      df: DataFrame, path: String, metric: Column = count(lit(1))): (Long, DataFrame) = {
+    val v = writeObserved(df, path, 0L, metric.as("v"))("v").asInstanceOf[Long]
+    (v, df.sparkSession.read.schema(df.schema).parquet(path))
+  }
+
+  /** Overwrite `path` with `df`, observing `metrics` (named aggregates) on
+    * the write job itself — df.observe; a separate aggregation would be a
+    * second scan. `maxRecordsPerFile` > 0 caps the rows per file. */
+  private def writeObserved(
+      df: DataFrame, path: String, maxRecordsPerFile: Long, metrics: Column*): Map[String, Any] = {
+    val obs = Observation()
+    val writer = df.observe(obs, metrics.head, metrics.tail: _*).write.mode(SaveMode.Overwrite)
+    (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
+     else writer).parquet(path)
+    obs.get
+  }
 
   /** Compact every live committed run into ONE new run of target-sized
     * files — the parquet surrogate of Iceberg's `rewrite_data_files`

@@ -11,7 +11,9 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 /** Driver-side parquet I/O for the few-row METADATA tables of the commit
-  * protocol (`_checkpoint`, `_retired`, the per-run `hot_hosts` audit).
+  * protocol (`_checkpoint`, `_retired`, the per-run `hot_hosts` audit and
+  * the per-run `lineage` rows, whose counts are observed on the extracted
+  * write — see [[ExtractJob.commitRun]]).
   *
   * Why not Spark (round-6 optimization, guide §5 "the driver should do
   * almost no data work" — and its dual: Spark should do no DRIVER work):
@@ -55,6 +57,22 @@ object MetaParquet {
       |  optional binary host (UTF8);
       |  optional double est_fraction;
       |  required boolean salted;
+      |}""".stripMargin)
+
+  // the schema Spark wrote for `groupBy(partition_id).agg(count, sum...)`
+  // over the read-back extracted files: the count non-null; the key (a
+  // file-source column, read back as nullable) and every sum nullable
+  private val lineageSchema: MessageType = MessageTypeParser.parseMessageType(
+    """message lineage {
+      |  optional int32 partition_id;
+      |  required int64 doc_count;
+      |  optional int64 bytes_in;
+      |  optional int64 chars_out;
+      |  optional int64 n_ok;
+      |  optional int64 n_empty;
+      |  optional int64 n_unsupported;
+      |  optional int64 n_parse_error;
+      |  optional int64 n_oversize;
       |}""".stripMargin)
 
   private def fs(dir: String, conf: Configuration): FileSystem =
@@ -161,15 +179,22 @@ object MetaParquet {
     }
   }
 
-  /** Overwrite the per-run salting-audit table (written even when empty so
-    * readers see a stable schema for every committed run — the
-    * SaveMode.Overwrite + empty-Dataset contract it replaces). */
-  def writeHotHosts(
-      dir: String, conf: Configuration, rows: Seq[ExtractJob.HotHostRow]): Unit = {
+  /** Replace `dir` with one file of `rows` (the SaveMode.Overwrite it
+    * replaces): written even when empty, so readers see a stable schema for
+    * every committed run. */
+  private def overwriteFile(
+      dir: String, schema: MessageType, conf: Configuration)(
+      rows: SimpleGroupFactory => Iterator[Group]): Unit = {
     val f = fs(dir, conf)
     val p = new Path(dir)
     if (f.exists(p)) f.delete(p, true)
-    writeFile(dir, hotHostSchema, conf) { gf =>
+    writeFile(dir, schema, conf)(rows)
+  }
+
+  /** Overwrite the per-run salting-audit table. */
+  def writeHotHosts(
+      dir: String, conf: Configuration, rows: Seq[ExtractJob.HotHostRow]): Unit =
+    overwriteFile(dir, hotHostSchema, conf) { gf =>
       rows.iterator.map { r =>
         val g = gf.newGroup()
         g.add("run_id", r.run_id)
@@ -179,5 +204,25 @@ object MetaParquet {
         g
       }
     }
-  }
+
+  /** Overwrite the per-run lineage table: one row per output partition,
+    * the same columns, types and nullability as the Spark-written tables of
+    * earlier runs, so [[ExtractJob.readLineage]] reads both as one table. */
+  def writeLineage(
+      dir: String, conf: Configuration, rows: Seq[ExtractJob.LineageRow]): Unit =
+    overwriteFile(dir, lineageSchema, conf) { gf =>
+      rows.iterator.map { r =>
+        val g = gf.newGroup()
+        g.add("partition_id", r.partition_id)
+        g.add("doc_count", r.doc_count)
+        g.add("bytes_in", r.bytes_in)
+        g.add("chars_out", r.chars_out)
+        g.add("n_ok", r.n_ok)
+        g.add("n_empty", r.n_empty)
+        g.add("n_unsupported", r.n_unsupported)
+        g.add("n_parse_error", r.n_parse_error)
+        g.add("n_oversize", r.n_oversize)
+        g
+      }
+    }
 }

@@ -78,7 +78,9 @@ object StreamingExtract {
     * (VERDICT r1 #10 — lineage was previously batch-only).
     *
     * Exactly-once: every batch goes through the batch job's committed-run
-    * protocol ([[graft.spark.ExtractJob.commitRun]]) and is COMMITTED to the
+    * protocol ([[graft.spark.ExtractJob.commitRun]]: one Spark query, the
+    * batch's extracted write, with its lineage counters observed on that
+    * write and the lineage rows written by the driver) and is COMMITTED to the
     * `_checkpoint` store under its batchId, so the documented reader views
     * `ExtractJob.readExtracted`/`readLineage` see it (round-4 review:
     * without the commit they silently returned EMPTY over a fully

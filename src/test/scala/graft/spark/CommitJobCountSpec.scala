@@ -8,11 +8,11 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the number of Spark jobs each committed-run entry point launches.
-  * The protocol's metadata lives on the driver and every read-back of a
-  * just-written directory passes the written schema, so apart from
-  * compaction's one schema read of the live runs the counts are data jobs
-  * only: a regression that adds a schema-inference job, a separate count
-  * or a metadata round-trip shows up here as +1.
+  * The protocol's metadata lives on the driver and the lineage counters
+  * are observed on the extracted write, so apart from compaction's one
+  * schema read of the live runs the counts are data jobs only: a
+  * regression that adds a schema-inference job, a separate count, a
+  * lineage query or a metadata round-trip shows up here as +1.
   *
   * Hot hosts come from a static list, so the sampling pre-pass (not part
   * of the protocol) launches no jobs. */
@@ -56,10 +56,10 @@ class CommitJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  test("fresh run: extract+write (map stage + write) and lineage (map stage + write)") {
+  test("fresh run: one extract+write query (map stage + write), lineage observed on it") {
     val dir = tmp("graft_jobs_fresh")
     val pages = landed(dir, 300)
-    assert(jobsOf(ExtractJob.run(spark, pages, s"$dir/out", cfg)) == 4)
+    assert(jobsOf(ExtractJob.run(spark, pages, s"$dir/out", cfg)) == 2)
     assert(ExtractJob.readExtracted(spark, s"$dir/out").count() == 300)
   }
 
@@ -68,25 +68,25 @@ class CommitJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     ExtractJob.run(spark, landed(dir, 200), s"$dir/out", cfg)
     val pages = landed(dir, 300)
     var r: ExtractJob.RunResult = null
-    assert(jobsOf { r = ExtractJob.run(spark, pages, s"$dir/out", cfg) } == 5)
+    assert(jobsOf { r = ExtractJob.run(spark, pages, s"$dir/out", cfg) } == 3)
     assert(r.newDocs == 100)
   }
 
-  test("compact: one schema read of the live runs, the rewrite and its lineage") {
+  test("compact: one schema read of the live runs and the rewrite, lineage observed on it") {
     val dir = tmp("graft_jobs_compact")
     ExtractJob.run(spark, landed(dir, 200), s"$dir/out", cfg)
     ExtractJob.run(spark, landed(dir, 300), s"$dir/out", cfg)
     var c: ExtractJob.RunResult = null
-    assert(jobsOf { c = ExtractJob.compact(spark, s"$dir/out") } == 5)
+    assert(jobsOf { c = ExtractJob.compact(spark, s"$dir/out") } == 3)
     assert(c.docs == 300)
   }
 
-  test("one-batch runWithLineage drain: extract+write and lineage, nothing cached") {
+  test("one-batch runWithLineage drain: one extract+write query, nothing cached") {
     val dir = tmp("graft_jobs_stream")
     Corpus.pages(spark, 200).write.parquet(s"$dir/in")
     val n = jobsOf(StreamingExtract.runWithLineage(
       spark, s"$dir/in", s"$dir/out", s"$dir/ckpt", cfg).awaitTermination())
-    assert(n == 4)
+    assert(n == 2)
     assert(ExtractJob.readExtracted(spark, s"$dir/out").count() == 200)
   }
 }

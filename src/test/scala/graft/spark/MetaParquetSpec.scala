@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.sum
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -114,6 +115,40 @@ class MetaParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(empty.columns.toSeq == Seq("run_id", "host", "est_fraction", "salted"))
     // and the multi-run union read (readHotHosts' shape) still resolves
     assert(spark.read.parquet(p0, p1).count() == 2)
+  }
+
+  test("lineage: a Spark-written run and a driver-written run read as one table") {
+    val dir = tmp("meta_lineage")
+    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 2)
+    ExtractJob.run(spark, Corpus.pages(spark, 200), dir, cfg)
+    // run 0's lineage the old way: Spark's groupBy over the written files
+    LineageOracle.agg(spark.read.parquet(s"$dir/extracted/run_id=0"))
+      .write.mode("overwrite").parquet(s"$dir/lineage/run_id=0")
+    ExtractJob.run(spark, Corpus.pages(spark, 300), dir, cfg)
+
+    def fileOf(run: Int) = new java.io.File(s"$dir/lineage/run_id=$run").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).toSeq match {
+        case Seq(f) => f.getPath
+        case fs => fail(s"run $run: expected one lineage file, got $fs")
+      }
+    // the parquet columns match, repetition (nullability) included
+    def footer(run: Int) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(fileOf(run)), conf))
+      try r.getFooter.getFileMetaData.getSchema.getFields finally r.close()
+    }
+    assert(footer(0) == footer(1))
+    assert(footer(1).toString.startsWith("[optional int32 partition_id, required int64 doc_count, optional int64 bytes_in"))
+    assert(spark.read.parquet(fileOf(0)).schema == spark.read.parquet(fileOf(1)).schema)
+
+    val lin = ExtractJob.readLineage(spark, dir)
+    assert(lin.columns.toSeq == LineageOracle.columns)
+    assert(lin.schema == spark.read.parquet(fileOf(0)).schema)
+    val sums = lin.agg(sum("doc_count"), sum("n_ok") + sum("n_empty") + sum("n_unsupported") +
+      sum("n_parse_error") + sum("n_oversize")).first()
+    assert(sums.getLong(0) == 300 && sums.getLong(1) == 300)
+    assert(spark.read.parquet(s"$dir/_checkpoint").agg(sum("doc_count")).first().getLong(0) == 300)
   }
 
   test("a null fingerprint fails the commit loudly and writes nothing") {

@@ -107,6 +107,59 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(agg.getLong(0) == agg.getLong(1) + agg.getLong(2) + agg.getLong(3))
   }
 
+  /** Run `runId`'s lineage equals the groupBy oracle over its written
+    * files row for row, and its Σ doc_count equals the `_checkpoint` count. */
+  private def assertLineageIsOracle(dir: String, runId: Long): Unit = {
+    val got = LineageOracle.committed(spark, dir, runId)
+    assert(got == LineageOracle.expected(spark, dir, runId), s"run $runId")
+    val committed = spark.read.parquet(s"$dir/_checkpoint")
+      .filter(col("run_id") === runId).select("doc_count").collect().map(_.getLong(0)).toSeq
+    assert(committed == Seq(got.map(_(1).asInstanceOf[Long]).sum), s"run $runId")
+  }
+
+  test("lineage rows equal the groupBy oracle: fresh, resuming, capped-file, all-empty and compact runs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lin_oracle").toString
+    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4)
+    val fresh = ExtractJob.run(spark, Corpus.pages(spark, 300), dir, cfg)
+    assertLineageIsOracle(dir, fresh.runId)
+    val resumed = ExtractJob.run(spark, Corpus.pages(spark, 400), dir, cfg)
+    assert(resumed.newDocs == 100)
+    assertLineageIsOracle(dir, resumed.runId)
+    // several files per partition: the rows still sum per partition
+    val capped = ExtractJob.run(spark, Corpus.pages(spark, 500), dir, cfg, maxRecordsPerFile = 20L)
+    assert(capped.newDocs == 100)
+    assert(new java.io.File(s"$dir/extracted/run_id=${capped.runId}").listFiles()
+      .count(_.getName.endsWith(".parquet")) > 4)
+    assertLineageIsOracle(dir, capped.runId)
+    val empty = ExtractJob.run(spark, Corpus.pages(spark, 500), dir, cfg)
+    assert(empty.newDocs == 0)
+    assertLineageIsOracle(dir, empty.runId)
+    // zero rows, and still a readable lineage schema
+    assert(spark.read.parquet(s"$dir/lineage/run_id=${empty.runId}").columns.toSeq ==
+      LineageOracle.columns)
+    val c = ExtractJob.compact(spark, dir)
+    assert(c.docs == 500)
+    assertLineageIsOracle(dir, c.runId)
+  }
+
+  test("lineage rows equal the groupBy oracle: one-batch runWithLineage drain") {
+    val base = java.nio.file.Files.createTempDirectory("graft_lin_stream").toString
+    Corpus.pages(spark, 300).write.parquet(s"$base/in")
+    graft.streaming.StreamingExtract.runWithLineage(spark, s"$base/in", s"$base/out",
+      s"$base/ckpt", ExtractPipeline.PipelineConfig(numPartitions = 4)).awaitTermination()
+    assert(new ParquetCheckpointStore(spark, s"$base/out").committedRunIds() == Seq(0L))
+    assertLineageIsOracle(s"$base/out", 0L)
+  }
+
+  test("commitRun: null byte and char counts sum like the groupBy oracle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lin_null").toString
+    val df = ExtractPipeline.extract(spark, Corpus.pages(spark, 200)).toDF()
+      .withColumn("n_chars", when(col("failure") === "ok", col("n_chars")))
+      .withColumn("n_bytes_in", when(col("failure") =!= "ok", col("n_bytes_in")))
+    ExtractJob.commitRun(new ParquetCheckpointStore(spark, dir), dir, 0L, df, "fp")(audit = ())
+    assertLineageIsOracle(dir, 0L)
+  }
+
   test("hotHosts: per-partition sampling finds a hot host clustered in LATE partitions (round-4)") {
     val s = spark; import s.implicits._
     // host-clustered layout (what a host-bucketed table looks like): 100
