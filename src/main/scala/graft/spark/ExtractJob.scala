@@ -84,8 +84,9 @@ object ExtractJob {
 
     // hot-host estimation is lifted OUT of extract() so the run can audit
     // it: the estimates (or the static list) become hot_hosts rows, and
-    // extract() receives the resolved set — the sampling pre-pass runs
-    // once either way
+    // extract() receives the resolved set — the sampling pre-pass (one
+    // map-only job over the pending urls, thresholded on the driver) runs
+    // once either way, and not at all with a static list
     val salted = cfg.repartitionByHost && cfg.saltBuckets > 1
     val hotRows: Seq[HotHostRow] =
       if (!cfg.repartitionByHost) Seq.empty

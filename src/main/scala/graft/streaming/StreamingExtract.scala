@@ -38,7 +38,8 @@ object StreamingExtract {
     * run the sampling pre-pass per micro-batch, but an AvailableNow drain
     * CAN derive the hot list ONCE per drain from a bounded BATCH sample of
     * the same input directory (url column only — pruned, sampled, capped
-    * exactly like the batch job). A static list still wins when provided;
+    * and counted exactly like the batch job, in one map-only Spark job per
+    * drain). A static list still wins when provided;
     * with repartitioning explicitly off, nothing is derived. */
   private def withDerivedHotHosts(
       spark: SparkSession, inDir: String,

@@ -14,8 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * regression that adds a schema-inference job, a separate count, a
   * lineage query or a metadata round-trip shows up here as +1.
   *
-  * Hot hosts come from a static list, so the sampling pre-pass (not part
-  * of the protocol) launches no jobs. */
+  * The protocol pins use a static hot-host list, so the sampling pre-pass
+  * (not part of the protocol) launches no jobs there. The estimator pins
+  * run the same entry points with no static list: each estimate adds its
+  * one map-only job, and on a resuming run the anti-join it samples adds
+  * its own broadcast job. */
 class CommitJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -87,6 +90,43 @@ class CommitJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = jobsOf(StreamingExtract.runWithLineage(
       spark, s"$dir/in", s"$dir/out", s"$dir/ckpt", cfg).awaitTermination())
     assert(n == 2)
+    assert(ExtractJob.readExtracted(spark, s"$dir/out").count() == 200)
+  }
+
+  /** Estimation on, as an exact census: the sample is never empty, so
+    * AQE cannot drop the stages after an empty shuffle and hide a plan's
+    * jobs (a 1% sample of 100 pending urls is often empty). */
+  private val estimated = ExtractPipeline.PipelineConfig(numPartitions = 4, sampleFraction = 1.0)
+
+  test("hotHostEstimates on a landed table: one map-only job") {
+    val dir = tmp("graft_jobs_hh")
+    val pages = landed(dir, 300)
+    var est: Seq[(String, Double)] = null
+    assert(jobsOf { est = ExtractPipeline.hotHostEstimates(spark, pages, estimated) } == 1)
+    assert(est.map(_._1) == Seq("hot.example.com"))
+  }
+
+  test("fresh run with estimated hot hosts: the sample adds one job") {
+    val dir = tmp("graft_jobs_fresh_est")
+    val pages = landed(dir, 300)
+    assert(jobsOf(ExtractJob.run(spark, pages, s"$dir/out", estimated)) == 3)
+  }
+
+  test("resuming run with estimated hot hosts: the anti-join's broadcast plus the sample") {
+    val dir = tmp("graft_jobs_resume_est")
+    ExtractJob.run(spark, landed(dir, 200), s"$dir/out", estimated)
+    val pages = landed(dir, 300)
+    var r: ExtractJob.RunResult = null
+    assert(jobsOf { r = ExtractJob.run(spark, pages, s"$dir/out", estimated) } == 5)
+    assert(r.newDocs == 100)
+  }
+
+  test("one-batch runWithLineage drain with derived hot hosts: the sample adds one job") {
+    val dir = tmp("graft_jobs_stream_est")
+    Corpus.pages(spark, 200).write.parquet(s"$dir/in")
+    val n = jobsOf(StreamingExtract.runWithLineage(
+      spark, s"$dir/in", s"$dir/out", s"$dir/ckpt", estimated).awaitTermination())
+    assert(n == 3)
     assert(ExtractJob.readExtracted(spark, s"$dir/out").count() == 200)
   }
 }
