@@ -1,10 +1,11 @@
 package graft.spark
 
-import graft.core.Failure
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, SaveMode, SparkSession}
+import graft.core.{ExtractedRow, Failure}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
 
 /** Committed, resumable extraction runs: extracted table + per-partition
   * lineage rows + a run-level checkpoint record.
@@ -258,28 +259,33 @@ object ExtractJob {
     RunResult(runId, docs, 0L)
   }
 
-  /** Idempotent reader view over all committed runs. */
+  /** Idempotent reader view over all committed runs. With none committed
+    * it is empty, with the columns a committed run reads back with. */
   def readExtracted(spark: SparkSession, outDir: String): DataFrame = {
     val store = new ParquetCheckpointStore(spark, outDir)
     store.committedRunIds() match {
-      case ids if ids.isEmpty => spark.emptyDataFrame
+      case ids if ids.isEmpty =>
+        emptyRead(spark, Encoders.product[ExtractedRow].schema.add("partition_id", IntegerType))
       case ids =>
         val paths = ids.map(id => s"$outDir/extracted/run_id=$id")
         spark.read.parquet(paths: _*).dropDuplicates("url")
     }
   }
 
+  /** The lineage rows of every live committed run; empty, with the lineage
+    * columns, when none is committed. */
   def readLineage(spark: SparkSession, outDir: String): DataFrame = {
     val store = new ParquetCheckpointStore(spark, outDir)
     val ids = store.committedRunIds()
-    if (ids.isEmpty) spark.emptyDataFrame
+    if (ids.isEmpty) emptyRead(spark, Encoders.product[LineageRow].schema)
     else spark.read.parquet(ids.map(id => s"$outDir/lineage/run_id=$id"): _*)
   }
 
   /** Salting-audit rows of every live committed run that has them
     * (compaction runs and pre-audit tables have none — skipped, not an
     * error; with NO audited run the result is an empty frame with the
-    * full HotHostRow schema, so column references still resolve —
+    * HotHostRow columns an audited run reads back with, so column
+    * references still resolve —
     * round-5 review: the schemaless emptyDataFrame broke
     * `readHotHosts(...).select("run_id")` on exactly the pre-audit
     * tables the doc promises to tolerate). */
@@ -290,10 +296,21 @@ object ExtractJob {
     val paths = store.committedRunIds()
       .map(id => s"$outDir/hot_hosts/run_id=$id")
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (paths.isEmpty) {
-      import spark.implicits._
-      Seq.empty[HotHostRow].toDS().toDF()
-    } else spark.read.parquet(paths: _*)
+    if (paths.isEmpty) emptyRead(spark, Encoders.product[HotHostRow].schema)
+    else spark.read.parquet(paths: _*)
+  }
+
+  /** An empty frame with the schema a parquet read of files written with
+    * `schema` yields: a file source reads every field as nullable, nested
+    * ones included. No Spark job. */
+  private def emptyRead(spark: SparkSession, schema: StructType): DataFrame = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case other => other
+    }
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), nullable(schema).asInstanceOf[StructType])
   }
 }
 

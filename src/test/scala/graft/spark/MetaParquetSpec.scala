@@ -181,4 +181,54 @@ class MetaParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     new java.io.File(s"$dir/_retired/.hidden").mkdirs()
     assert(MetaParquet.readRetired(s"$dir/_retired", conf).isEmpty)
   }
+
+  test("catalog reads open each file through the caller's conf, not a fresh Configuration") {
+    val dir = tmp("meta_conf")
+    val ckpt = s"$dir/_checkpoint"
+    val retired = s"$dir/_retired"
+    for (id <- 0L until 8L)
+      MetaParquet.appendCommit(ckpt, conf, id, 10L * id, s"fp$id", "2026-01-01T00:00:00Z")
+    MetaParquet.appendRetired(retired, conf, Seq(0L, 1L))
+    MetaParquet.appendRetired(retired, conf, Seq(2L))
+    // the first reads load the caller's conf's own resources
+    val rows = MetaParquet.readCheckpoint(ckpt, conf).sortBy(_._1).toSeq
+    val ret = MetaParquet.readRetired(retired, conf)
+    assert(rows == (0L until 8L).map(id => (id, s"fp$id")) && ret == Set(0L, 1L, 2L))
+
+    // a fresh Configuration looks its default resources up through the
+    // context class loader; count those lookups across both reads
+    val lookups = new java.util.concurrent.atomic.AtomicInteger
+    val thread = Thread.currentThread
+    val old = thread.getContextClassLoader
+    thread.setContextClassLoader(new ClassLoader(old) {
+      override def getResource(name: String): java.net.URL = {
+        if (name == "core-default.xml") lookups.incrementAndGet()
+        super.getResource(name)
+      }
+    })
+    val (rowsAfter, retAfter) =
+      try (MetaParquet.readCheckpoint(ckpt, conf).sortBy(_._1).toSeq,
+        MetaParquet.readRetired(retired, conf))
+      finally thread.setContextClassLoader(old)
+    assert(lookups.get == 0, s"${lookups.get} core-default.xml lookups over 10 catalog files")
+    assert(rowsAfter == rows && retAfter == ret)
+  }
+
+  test("reader views of a store with no committed run are empty with a committed run's schema") {
+    val fresh = tmp("meta_empty_views")
+    val oneRun = tmp("meta_one_run")
+    ExtractJob.run(spark, Corpus.pages(spark, 50), oneRun,
+      ExtractPipeline.PipelineConfig(numPartitions = 2))
+
+    val extracted = ExtractJob.readExtracted(spark, fresh)
+    val lineage = ExtractJob.readLineage(spark, fresh)
+    val hotHosts = ExtractJob.readHotHosts(spark, fresh)
+    assert(extracted.schema == ExtractJob.readExtracted(spark, oneRun).schema)
+    assert(lineage.schema == ExtractJob.readLineage(spark, oneRun).schema)
+    assert(hotHosts.schema == ExtractJob.readHotHosts(spark, oneRun).schema)
+
+    // the expressions a caller writes against a committed store resolve
+    assert(extracted.select("url").collect().isEmpty)
+    assert(lineage.agg(sum("doc_count")).first().isNullAt(0))
+  }
 }
