@@ -462,9 +462,10 @@ object SparkEntry {
         // stage 2: the dedup-flags table is materialized; stage 3 reads it
         // (rebalanced on write — guide §6: target-sized staged files, not
         // one tiny file per shuffle partition)
-        funnelFlags(extracted).hint("rebalance")
-          .write.mode("overwrite").parquet(s"$dir/funnel_flags")
-        val r = funnelCounts(s.read.parquet(s"$dir/funnel_flags"))
+        val flags = funnelFlags(extracted)
+        flags.hint("rebalance").write.mode("overwrite").parquet(s"$dir/funnel_flags")
+        // read back with the schema it was written with: no inference job
+        val r = funnelCounts(s.read.schema(flags.schema).parquet(s"$dir/funnel_flags"))
         import s.implicits._
         Seq((r2.runId + 1, r2.newDocs, r.getLong(0), r.getLong(1),
           r.getLong(2), r.getLong(3)))

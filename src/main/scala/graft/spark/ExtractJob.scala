@@ -1,11 +1,11 @@
 package graft.spark
 
 import graft.core.{ExtractedRow, Failure}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Committed, resumable extraction runs: extracted table + per-partition
   * lineage rows + a run-level checkpoint record.
@@ -248,10 +248,9 @@ object ExtractJob {
     val store = new ParquetCheckpointStore(spark, outDir)
     val ids = store.committedRunIds()
     require(ids.nonEmpty, s"nothing to compact under $outDir")
-    val live = spark.read
-      .parquet(ids.map(id => s"$outDir/extracted/run_id=$id"): _*)
+    // the rows without their old partition_id: commitRun tags the new one
+    val live = store.read("extracted", Encoders.product[ExtractedRow].schema, ids)
       .dropDuplicates("url")
-      .drop("partition_id")
     val runId = store.nextRunId()
     val docs = commitRun(store, outDir, runId, live,
       s"compaction:${ids.mkString("+")}", maxRecordsPerFile)(audit = ())
@@ -259,58 +258,30 @@ object ExtractJob {
     RunResult(runId, docs, 0L)
   }
 
-  /** Idempotent reader view over all committed runs. With none committed
-    * it is empty, with the columns a committed run reads back with. */
-  def readExtracted(spark: SparkSession, outDir: String): DataFrame = {
-    val store = new ParquetCheckpointStore(spark, outDir)
-    store.committedRunIds() match {
-      case ids if ids.isEmpty =>
-        emptyRead(spark, Encoders.product[ExtractedRow].schema.add("partition_id", IntegerType))
-      case ids =>
-        val paths = ids.map(id => s"$outDir/extracted/run_id=$id")
-        spark.read.parquet(paths: _*).dropDuplicates("url")
-    }
-  }
+  /** Idempotent reader view over all committed runs: the [[ExtractedRow]]
+    * columns plus `partition_id`, the schema [[commitRun]] writes. A store
+    * with no committed run reads as zero files: empty, same columns. */
+  def readExtracted(spark: SparkSession, outDir: String): DataFrame =
+    new ParquetCheckpointStore(spark, outDir)
+      .read("extracted", Encoders.product[ExtractedRow].schema.add("partition_id", IntegerType))
+      .dropDuplicates("url")
 
-  /** The lineage rows of every live committed run; empty, with the lineage
-    * columns, when none is committed. */
-  def readLineage(spark: SparkSession, outDir: String): DataFrame = {
-    val store = new ParquetCheckpointStore(spark, outDir)
-    val ids = store.committedRunIds()
-    if (ids.isEmpty) emptyRead(spark, Encoders.product[LineageRow].schema)
-    else spark.read.parquet(ids.map(id => s"$outDir/lineage/run_id=$id"): _*)
-  }
+  /** The lineage rows of every live committed run, with the [[LineageRow]]
+    * schema they are written with; empty when none is committed. */
+  def readLineage(spark: SparkSession, outDir: String): DataFrame =
+    new ParquetCheckpointStore(spark, outDir).read("lineage", Encoders.product[LineageRow].schema)
 
-  /** Salting-audit rows of every live committed run that has them
-    * (compaction runs and pre-audit tables have none — skipped, not an
-    * error; with NO audited run the result is an empty frame with the
-    * HotHostRow columns an audited run reads back with, so column
-    * references still resolve —
-    * round-5 review: the schemaless emptyDataFrame broke
-    * `readHotHosts(...).select("run_id")` on exactly the pre-audit
-    * tables the doc promises to tolerate). */
+  /** Salting-audit rows of every live committed run that has them, with the
+    * [[HotHostRow]] schema they are written with. Compaction runs, stream
+    * runs and pre-audit tables have none: skipped, not an error. With no
+    * audited run the view is empty, same columns. */
   def readHotHosts(spark: SparkSession, outDir: String): DataFrame = {
     val store = new ParquetCheckpointStore(spark, outDir)
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = store.committedRunIds()
-      .map(id => s"$outDir/hot_hosts/run_id=$id")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (paths.isEmpty) emptyRead(spark, Encoders.product[HotHostRow].schema)
-    else spark.read.parquet(paths: _*)
-  }
-
-  /** An empty frame with the schema a parquet read of files written with
-    * `schema` yields: a file source reads every field as nullable, nested
-    * ones included. No Spark job. */
-  private def emptyRead(spark: SparkSession, schema: StructType): DataFrame = {
-    def nullable(t: DataType): DataType = t match {
-      case s: StructType =>
-        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-      case other => other
-    }
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), nullable(schema).asInstanceOf[StructType])
+    val audited = store.committedRunIds()
+      .filter(id => fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/hot_hosts/run_id=$id")))
+    store.read("hot_hosts", Encoders.product[HotHostRow].schema, audited)
   }
 }
 
@@ -385,14 +356,23 @@ final class ParquetCheckpointStore(spark: SparkSession, outDir: String) {
     }
   }
 
-  /** The url column of every live run — a pruned scan read with its
-    * one-column schema, so no schema-inference job. */
+  /** The url column of every live run — a pruned scan; None when no run
+    * is committed, so a fresh run plans no anti-join. */
   def committedUrls(): Option[DataFrame] = {
     val ids = committedRunIds()
     if (ids.isEmpty) None
-    else Some(spark.read.schema("url STRING")
-      .parquet(ids.map(id => s"$outDir/extracted/run_id=$id"): _*))
+    else Some(read("extracted", StructType.fromDDL("url STRING"), ids))
   }
+
+  /** The committed per-run table `table` (`$outDir/$table/run_id=N`) of runs
+    * `ids`, every live run by default, read with `schema`: the schema the
+    * code writes the table with, as an Iceberg reader takes it from the
+    * table's metadata. No schema-inference job; a file read makes every
+    * field nullable. With no ids it reads zero files: an empty frame with
+    * the same columns. */
+  private[graft] def read(
+      table: String, schema: StructType, ids: Seq[Long] = committedRunIds()): DataFrame =
+    spark.read.schema(schema).parquet(ids.map(id => s"$outDir/$table/run_id=$id"): _*)
 
   /** Append the commit record of `runId`; `sourceFingerprint` must be
     * non-null (see [[MetaParquet.appendCommit]]). */

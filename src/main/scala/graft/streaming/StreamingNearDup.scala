@@ -76,8 +76,7 @@ object StreamingNearDup {
                 spark.createDataFrame(
                   spark.sparkContext.emptyRDD[Row], pairsSchema)
               else {
-                val oldCorpus = spark.read.parquet(
-                  prior.map(id => s"$outDir/corpus/run_id=$id"): _*)
+                val oldCorpus = store.read("corpus", docSchema, prior)
                 Dedup.probeMinhashIndex(df, "doc_id", "text", indexTable,
                   oldCorpus, shingleK, bands, rowsPerBand, threshold)
               }
@@ -97,11 +96,8 @@ object StreamingNearDup {
       .start()
   }
 
-  /** All committed batches' near-dup verdicts. */
-  def readPairs(spark: SparkSession, outDir: String): DataFrame = {
-    val ids = new ParquetCheckpointStore(spark, outDir).committedRunIds()
-    if (ids.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], pairsSchema)
-    else spark.read.parquet(ids.map(id => s"$outDir/pairs/run_id=$id"): _*)
-  }
+  /** All committed batches' near-dup verdicts, read with `pairsSchema`;
+    * empty before the first commit. */
+  def readPairs(spark: SparkSession, outDir: String): DataFrame =
+    new ParquetCheckpointStore(spark, outDir).read("pairs", pairsSchema)
 }
