@@ -476,24 +476,29 @@ object SparkEntry {
     "x25_streaming_extract" -> ((s, d) => {
       // Structured Streaming made driver-visible (round-4; previously
       // golden-gated only): the SAME kernel through readStream →
-      // AvailableNow → exactly-once parquet file sink, in TWO drains with
-      // new files landing in between — the second drain's checkpoint must
-      // process ONLY the new files (a re-process would double the counts
-      // and go red against the generation-time taxonomy truth).
+      // AvailableNow → one committed run per micro-batch, in TWO drains
+      // with new files landing in between — the second drain's checkpoint
+      // must process ONLY the new files. The taxonomy reads every committed
+      // row with no url dedup (readExtracted's would hide it), so a
+      // re-processed file doubles the counts and goes red against the
+      // generation-time taxonomy truth.
+      import graft.core.ExtractedRow
+      import graft.spark.ParquetCheckpointStore
       import graft.streaming.StreamingExtract
+      import org.apache.spark.sql.Encoders
       val n = math.min(Corpus.docsForSf(d), 2000L)
       val dir = graft.FsUtil.scratchDir("graft_x25_")
       try {
         val inDir = s"$dir/pages"
         Corpus.pagesRange(s, 0L, n / 2).write.mode("append").parquet(inDir)
-        StreamingExtract.run(s, inDir, s"$dir/out", s"$dir/ckpt").awaitTermination()
+        StreamingExtract.runWithLineage(s, inDir, s"$dir/out", s"$dir/ckpt").awaitTermination()
         Corpus.pagesRange(s, n / 2, n).write.mode("append").parquet(inDir)
-        StreamingExtract.run(s, inDir, s"$dir/out", s"$dir/ckpt").awaitTermination()
-        // taxonomy over the union of both drains (the file sink's
-        // _spark_metadata commit log makes this batch read exactly-once),
-        // collected eagerly: the temp dir is deleted on exit
+        StreamingExtract.runWithLineage(s, inDir, s"$dir/out", s"$dir/ckpt").awaitTermination()
+        // taxonomy over both drains' committed runs, collected eagerly:
+        // the temp dir is deleted on exit
         import s.implicits._
-        s.read.parquet(s"$dir/out")
+        new ParquetCheckpointStore(s, s"$dir/out")
+          .read("extracted", Encoders.product[ExtractedRow].schema)
           .groupBy("failure")
           .agg(count(lit(1)).as("n"), sum("n_chars").as("chars"))
           .orderBy("failure")

@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.core.assemble.TextAssembler
-import graft.core.classify.{BlockClassifier, HeuristicClassifier}
+import graft.core.classify.HeuristicClassifier
 import graft.core.html.{BlockSegmenter, HtmlTokenizer}
 import graft.core.pdf.PdfTextExtractor
 import java.nio.charset.{Charset, StandardCharsets}
@@ -17,8 +17,7 @@ import java.nio.charset.{Charset, StandardCharsets}
   * main/ocr.h:208, main/kd.c:233-238 → `failure` taxonomy column).
   */
 final class Extractor(
-    cfg: ExtractorConfig = ExtractorConfig.default,
-    classifier: BlockClassifier = HeuristicClassifier) extends Serializable {
+    cfg: ExtractorConfig = ExtractorConfig.default) extends Serializable {
 
   // one corrector per Extractor instance (per task) — its memo cache is the
   // fixspell `%corrected` analog and must outlive single documents. The
@@ -65,7 +64,7 @@ final class Extractor(
           decoded, cfg.fissionMinLinkRun, cfg.fissionMinTextWords, cfg.maxTokens)
         if (blocks.isEmpty) row("", Nil, Failure.Empty, 0)
         else {
-          val kept = classifier.classify(blocks, cfg)
+          val kept = HeuristicClassifier.classify(blocks, cfg)
           val (text0, spans0) = TextAssembler.assembleBlocks(kept, cfg, lang)
           // language-keyed post passes (P3-P5 analog); no-op unless `lang`
           // has a registered rule set
@@ -100,7 +99,7 @@ final class Extractor(
       val decoded = Extractor.decode(bytes)
       val blocks = BlockSegmenter.segmentDirect(
         decoded, cfg.fissionMinLinkRun, cfg.fissionMinTextWords, cfg.maxTokens)
-      val kept = classifier.classify(blocks, cfg)
+      val kept = HeuristicClassifier.classify(blocks, cfg)
       // classify returns the SAME instances in document order — a single
       // forward walk labels every candidate by reference identity
       var k = 0

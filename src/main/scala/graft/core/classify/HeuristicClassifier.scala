@@ -2,17 +2,10 @@ package graft.core.classify
 
 import graft.core.{Block, BlockKind, ExtractorConfig}
 
-/** Pluggable block classifier — the analog of the reference's pluggable
-  * glyph classifier (kd-NN default, swappable for `-P` prediction files,
-  * main/kd.c:210-251). The default is a deterministic text-density /
-  * link-density heuristic (Boilerpipe/trafilatura-class).
-  */
-trait BlockClassifier extends Serializable {
-  /** Return the kept blocks with their kinds, in document order. */
-  def classify(blocks: Vector[Block], cfg: ExtractorConfig): Vector[(Block, String)]
-}
-
-/** Default heuristic classifier.
+/** The block classifier — the analog of the reference's pluggable glyph
+  * classifier (kd-NN default, swappable for `-P` prediction files,
+  * main/kd.c:210-251): a deterministic text-density / link-density
+  * heuristic (Boilerpipe/trafilatura-class).
   *
   * Rules (all thresholds in [[ExtractorConfig]]):
   *  1. blocks inside boilerplate containers (nav/header/footer/aside/form or
@@ -31,7 +24,7 @@ trait BlockClassifier extends Serializable {
   *     deliberately no list-majority vote: the generation-time oracle and
   *     the fixture goldens pin per-item behavior (VERDICT r2 #7).
   */
-object HeuristicClassifier extends BlockClassifier {
+object HeuristicClassifier {
 
   /** Classification distance of a feature tuple from the "content" profile:
     * 0 = confident content, positive = proportional rule violations (link
@@ -52,7 +45,8 @@ object HeuristicClassifier extends BlockClassifier {
   private final val Heading = 2
   private final val ListItem = 3
 
-  override def classify(blocks: Vector[Block], cfg: ExtractorConfig): Vector[(Block, String)] = {
+  /** Return the kept blocks with their kinds, in document order. */
+  def classify(blocks: Vector[Block], cfg: ExtractorConfig): Vector[(Block, String)] = {
     val n = blocks.length
     val labels = new Array[Int](n)
 

@@ -51,12 +51,6 @@ object Dedup {
 
   // --- exact ---------------------------------------------------------------
 
-  /** Exact duplicate clusters by content hash. Returns one row per distinct
-    * text: (rep_id = min id, dup_count). */
-  def exactClusters(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("rep_id"), count(lit(1)).as("dup_count"))
-
   /** Keep one representative row per distinct text (deterministic: min id). */
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))

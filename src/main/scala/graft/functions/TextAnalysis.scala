@@ -37,20 +37,10 @@ object TextAnalysis {
   def tokenCount(c: Column): Column =
     when(length(trim(c)) === 0, lit(0)).otherwise(size(split(trim(c), "\\s+")))
 
-  /** Characters that are letters (any script). */
-  def letterCount(c: Column): Column = length(regexp_replace(c, "[^\\p{L}]", ""))
-
   /** Punctuation ratio — native. */
   def punctRatio(c: Column): Column =
     when(length(c) === 0, lit(0.0))
       .otherwise(length(regexp_replace(c, "[^\\p{Punct}]", "")).cast("double") / length(c))
-
-  /** Uppercase ratio over letters — native. */
-  def upperRatio(c: Column): Column = {
-    val letters = letterCount(c)
-    when(letters === 0, lit(0.0))
-      .otherwise(length(regexp_replace(c, "[^\\p{Lu}]", "")).cast("double") / letters)
-  }
 
   /** Mean token length — native. */
   def meanTokenLen(c: Column): Column = {

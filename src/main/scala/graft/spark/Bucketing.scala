@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed (co-located) storage for repeated joins — the "bucketing for
   * co-located joins" scale tool: writing both sides of a recurring join
@@ -28,10 +28,4 @@ object Bucketing {
       .sortBy(keyCol)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Join two bucketed tables on their bucket key. With equal bucket
-    * counts the plan is exchange-free (asserted in BucketingSpec). */
-  def bucketedJoin(
-      spark: SparkSession, left: String, right: String, keyCol: String): DataFrame =
-    spark.table(left).join(spark.table(right), Seq(keyCol))
 }

