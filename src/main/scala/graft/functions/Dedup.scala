@@ -230,6 +230,11 @@ object Dedup {
     *  3. Sort within partitions on `groupId`, so each document's pairs
     *     arrive as one run.
     *
+    * Pick as `groupId` the side whose documents repeat most across
+    * candidates, and as `otherId` the side small enough for the memo:
+    * [[minhashPairs]] groups on id_a, [[probeMinhashIndex]] on the
+    * corpus side (old_id) with the new batch in the memo.
+    *
     * Output: (groupId, otherId, group text, other text) — the ordinals
     * [[verifyJaccard]] reads. */
   private def groupedForVerify(
@@ -246,7 +251,10 @@ object Dedup {
   /** Per-task cap on the shingle longs [[verifyJaccard]]'s memo holds:
     * 2^20 longs ≈ 8 MB. Bounded by BYTES, not entries — one 100k-char
     * document's set alone is ~800 KB, so an entry cap either wastes the
-    * memo on short texts or lets a few long ones pin tens of MB. */
+    * memo on short texts or lets a few long ones pin tens of MB. The
+    * memo holds the other side: for the probe, the new batch, so its
+    * size is about the wave's docs × shingles per doc per task — ≈0.8M
+    * longs for a 1k-doc wave, inside the cap. */
   private final val VerifyMemoLongs = 1 << 20
 
   /** Exact-Jaccard verification of candidate pairs. Input schema MUST be
@@ -262,7 +270,9 @@ object Dedup {
     *  - the grouping side through a one-entry cache, rebuilt when the
     *    run of equal groupIds ends;
     *  - the other side through a memo keyed by otherId (hub documents
-    *    pair with many group documents). The memo holds at most
+    *    pair with many group documents; for [[probeMinhashIndex]] the
+    *    other side is the new batch, each of whose docs pairs with
+    *    several old docs of one task). The memo holds at most
     *    [[VerifyMemoLongs]] shingle longs per task; it is cleared when
     *    the next set would pass that bound, and a set larger than the
     *    bound is never held.
@@ -360,21 +370,27 @@ object Dedup {
   private def writeIndex(
       df: DataFrame, idCol: String, textCol: String, table: String,
       shingleK: Int, bands: Int, rowsPerBand: Int, buckets: Int,
-      mode: org.apache.spark.sql.SaveMode): Unit =
+      mode: org.apache.spark.sql.SaveMode): Unit = {
+    // repartition by BUCKET ID before the write (guide §6 small files):
+    // an unpartitioned bucketed write emits one file per (task, bucket) —
+    // up to tasks×buckets small files per wave — so every probe paid
+    // per-file open overhead across the whole index. Keying the exchange
+    // on the bucket spec's own id expression (Murmur3, seed 42, pmod
+    // buckets) sends every row of a bucket to the same task, so each
+    // writer task holds WHOLE buckets and emits one sorted file per
+    // bucket per wave, in min(buckets, numShufflePartitions) tasks — the
+    // cluster's width. One task per bucket would give the same files but
+    // pay a task's setup and commit per bucket: 10^3 tasks per wave at
+    // 10^3 buckets.
+    // (The probe's index-side SortExec is unaffected either way: since
+    // Spark 3 the bucketed scan only reports sort order under the legacy
+    // outputOrdering flag.)
+    val tasks = math.min(buckets, df.sparkSession.sessionState.conf.numShufflePartitions)
     graft.spark.Bucketing.writeBucketed(
-      // repartition INTO the bucket hash before the write (round-6, guide
-      // §6 small files): an unpartitioned bucketed write emits one file
-      // per (task, bucket) — up to tasks×buckets small files per wave —
-      // so every probe paid per-file open overhead across the whole
-      // index. One exchange of 16-byte (id, band_hash) rows buys one
-      // sorted file per bucket per wave; repartition's HashPartitioning
-      // is the same murmur3-pmod the bucket spec uses, so each writer
-      // task holds exactly one bucket. (The probe's index-side SortExec
-      // is unaffected either way: since Spark 3 the bucketed scan only
-      // reports sort order under the legacy outputOrdering flag.)
       bandRows(df, idCol, textCol, shingleK, bands, rowsPerBand)
-        .repartition(buckets, col("band_hash")),
+        .repartition(tasks, pmod(hash(col("band_hash")), lit(buckets))),
       table, "band_hash", buckets, mode)
+  }
 
   /** Compact a [[writeMinhashIndex]] table back to one file per bucket —
     * the index analog of [[graft.spark.ExtractJob.compact]] (VERDICT r4
@@ -393,7 +409,12 @@ object Dedup {
     * the bucketing, and it also elides a manual pre-write repartition)
     * yields exactly one task per bucket holding that bucket's rows, so
     * the writer emits one sorted file per bucket. At 10^12 index rows
-    * this moves bytes disk-to-disk only, no exchange. The conf override
+    * this moves bytes disk-to-disk only, no exchange. Unlike
+    * `writeIndex`, which shuffles the (small) batch and then packs whole
+    * buckets into numShufflePartitions tasks, the rewrite keeps one task
+    * per bucket on purpose: packing buckets into fewer tasks would need
+    * an exchange of the whole index, and the bucketed scan already
+    * delivers each bucket in its own split. The conf override
     * lives in a CLONED session (same SparkContext and catalog, own
     * SQLConf — round-5 review: flipping it on the caller's session
     * degraded every concurrent bucketed scan for the rewrite's whole
@@ -454,10 +475,17 @@ object Dedup {
     * Scale shape: the new batch's band rows shuffle INTO the index's
     * bucketing (ids+hashes only); the index side is an exchange-free
     * bucketed scan. Candidate pairs are ids-only, and only ids cross the
-    * verify exchange, which groups them by new_id; the old and then the
-    * new texts join back BY ID after it ([[groupedForVerify]]; while the
-    * text sides broadcast, no exchange carries text). Same parameters as
-    * the index write MUST be used, or band hashes will not align. */
+    * verify exchange, which groups them by old_id; the new and then the
+    * old texts join back BY ID after it ([[groupedForVerify]]; while the
+    * text sides broadcast, no exchange carries text). Grouping on the
+    * corpus side builds each old document's shingle set ONCE: an old doc
+    * has several candidates (≈7.5 in the benchmark), which a grouping on
+    * new_id scattered over most tasks, so it was rebuilt in each of them
+    * (≈13k builds per 1k-doc wave against ≈3.6k old docs); grouped on
+    * old_id, the new batch is what repeats, and it goes through the
+    * verify's per-task memo (≈7k builds). Output columns are
+    * (new_id, old_id, jaccard), in that order. Same parameters as the
+    * index write MUST be used, or band hashes will not align. */
   def probeMinhashIndex(
       newDf: DataFrame, idCol: String, textCol: String,
       indexTable: String, oldCorpus: DataFrame,
@@ -473,10 +501,11 @@ object Dedup {
       .filter(col("new_id") =!= col("old_id"))
       .select("new_id", "old_id")
       .dropDuplicates("new_id", "old_id") // a candidate may fire in several bands
-    verifyJaccard(groupedForVerify(cand, "new_id", "old_id",
-      oldCorpus.select(col(idCol).as("old_id"), col(textCol).as("old_text")),
-      newDf.select(col(idCol).as("new_id"), col(textCol).as("new_text"))),
+    verifyJaccard(groupedForVerify(cand, "old_id", "new_id",
+      newDf.select(col(idCol).as("new_id"), col(textCol).as("new_text")),
+      oldCorpus.select(col(idCol).as("old_id"), col(textCol).as("old_text"))),
       shingleK, threshold)
+      .select("new_id", "old_id", "jaccard")
   }
 
   // --- line-level boilerplate dedup ------------------------------------------

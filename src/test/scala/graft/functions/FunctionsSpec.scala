@@ -284,7 +284,29 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dedup.writeMinhashIndex(old.toDF("doc_id", "text"), "doc_id", "text", tbl, buckets = 4)
       val p = Dedup.probeMinhashIndex(fresh.toDF("doc_id", "text"), "doc_id", "text", tbl,
         old.toDF("doc_id", "text"), threshold = 0.3)
-      idsOnlyVerifyStage(p, "new_id")
+      idsOnlyVerifyStage(p, "old_id")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("probeMinhashIndex: output columns are new_id, old_id, jaccard, in that order") {
+    // callers read the pairs by ordinal (x26: r.getLong(0)) or write them
+    // under a fixed schema (StreamingNearDup's pairsSchema), so the verify's
+    // grouping side must not leak into the column order
+    val s = spark; import s.implicits._
+    val texts = (0 until 12).map(i => s"shared preamble about web text number ${i % 4} and more words $i")
+    val all = texts.zipWithIndex.map { case (t, i) => (i + 1, t) }
+    val (old, fresh) = all.partition(_._1 % 2 == 0)
+    val tbl = "inc_idx_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    try {
+      Dedup.writeMinhashIndex(old.toDF("doc_id", "text"), "doc_id", "text", tbl, buckets = 4)
+      val p = Dedup.probeMinhashIndex(fresh.toDF("doc_id", "text"), "doc_id", "text", tbl,
+        old.toDF("doc_id", "text"), threshold = 0.3)
+      assert(p.columns.toSeq == Seq("new_id", "old_id", "jaccard"))
+      val rows = p.collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        assert(fresh.exists(_._1 == r.getInt(0)) && old.exists(_._1 == r.getInt(1)), s"$r")
+      }
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
@@ -363,6 +385,22 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.enabled")
     }
+  }
+
+  test("embeddingNearDupPairs: self-join sides share ONE exchange in the final adaptive plan (AQE on)") {
+    // production settings (x15): AQE on, default broadcast threshold. The
+    // reuse must survive AQE's re-planning, not only the static plan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    object aqe extends AdaptiveSparkPlanHelper
+    val s = spark; import s.implicits._
+    val vecs = (0 until 32).map(i => (i.toLong, Array.tabulate(8)(d => (i * d).toFloat / 7f + 1f)))
+      .toDF("vec_id", "embedding")
+    val q = Similarity.embeddingNearDupPairs(vecs, threshold = 0.3)
+    assert(q.collect().nonEmpty)
+    val plan = q.queryExecution.executedPlan
+    assert(aqe.collect(plan) { case r: ReusedExchangeExec => r }.nonEmpty,
+      s"embeddingNearDupPairs self-join did not reuse an exchange:\n$plan")
   }
 
   test("incremental near-dup: probe reports new-vs-old pairs only") {
